@@ -38,10 +38,13 @@ scalable formulation.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import tables
+from ..pinning import build_concurrently
 from ..pinning import shared_pin as _shared_pin
 from .dedup import simhash_pairs_query
 
@@ -214,13 +217,15 @@ def connected_components(
     # scheduling regardless of data size, and the embedding near-dup
     # graph needed 14 rounds (long chains) on a 1,309-edge graph — the
     # fixpoint was ALL fixed overhead. One partition-local union-find
-    # pass (no shuffle: ``both`` is already hash-partitioned) collapses
-    # every within-partition path to a star; the loop then only has to
-    # stitch stars across partitions, in ~log(#partitions-per-chain)
-    # rounds. The ``nodes``-restriction contract is preserved by
-    # semi-joining both endpoints before the contraction (only ids
-    # present in ``nodes`` may relay connectivity — the same effective
-    # edge set the old loop's label join enforced).
+    # pass collapses every within-partition path to a star; the loop
+    # then only has to stitch stars across partitions, in
+    # ~log(#partitions-per-chain) rounds. The pass itself adds no
+    # exchange, but the ``nodes`` semi-joins before it may re-partition
+    # the edges; that changes only the round count, never the labels.
+    # The ``nodes``-restriction contract is preserved by semi-joining
+    # both endpoints before the contraction (only ids present in
+    # ``nodes`` may relay connectivity — the same effective edge set
+    # the old loop's label join enforced).
     eligible = (
         both.join(
             nodes.select(F.col("doc_id").alias("src")), "src", "left_semi"
@@ -572,13 +577,10 @@ def cluster_keep_list_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shared executors (the dedup_tier_agreement scheduling pattern),
     # so wall time is max(CC, PR), not the sum — shared_pin's per-key
     # locks make the concurrent builds race-free.
-    from concurrent.futures import ThreadPoolExecutor
-
     _doc_both(spark, sf_dir)  # build the shared prefix once, not per thread
-    with ThreadPoolExecutor(2) as ex:
-        f_cc = ex.submit(_doc_cc, spark, sf_dir)
-        f_pr = ex.submit(_doc_pagerank, spark, sf_dir)
-        cc, pr = f_cc.result(), f_pr.result()
+    cc, pr = build_concurrently(
+        partial(_doc_cc, spark, sf_dir), partial(_doc_pagerank, spark, sf_dir)
+    )
     w = Window.partitionBy("cluster_id").orderBy(
         F.col("pagerank").desc(), F.col("doc_id")
     )

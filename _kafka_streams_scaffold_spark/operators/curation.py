@@ -51,8 +51,7 @@ def corpus_keep_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     # back-to-back inside one action. Values unchanged; measured
     # ~2.3s -> ~1.5s warm solo.
     def build() -> DataFrame:
-        from concurrent.futures import ThreadPoolExecutor
-
+        from ..pinning import build_concurrently
         from ..pinning import pin as _pin
 
         def _canonical() -> DataFrame:
@@ -69,7 +68,7 @@ def corpus_keep_query(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             )
 
-        tasks = (
+        quality, lang, canonical, contam = build_concurrently(
             lambda: _pin(
                 quality_score_query(spark, sf_dir).select(
                     "doc_id", "quality_score"
@@ -81,10 +80,6 @@ def corpus_keep_query(spark: SparkSession, sf_dir: str) -> DataFrame:
             _canonical,
             lambda: _pin(contamination_query(spark, sf_dir)),
         )
-        with ThreadPoolExecutor(len(tasks)) as ex:
-            quality, lang, canonical, contam = (
-                f.result() for f in [ex.submit(t) for t in tasks]
-            )
 
         keep = (
             (F.col("quality_score") >= MIN_QUALITY)
@@ -188,14 +183,13 @@ def corpus_keep_full_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     # id-width pinned frames. Values unchanged (pins only move where
     # subtrees materialize); measured 4.8s -> ~2.9s warm-keep solo.
     def build() -> DataFrame:
-        from concurrent.futures import ThreadPoolExecutor
-
+        from ..pinning import build_concurrently
         from ..pinning import pin as _pin
         from .dedup import doc_ngram_novelty_query
         from .lm import unigram_lm_score_query
         from .substring_dedup import substring_dup_docs_query
 
-        tasks = (
+        base, spans, nov, lm_score = build_concurrently(
             lambda: corpus_keep_query(spark, sf_dir),
             lambda: _pin(
                 substring_dup_docs_query(spark, sf_dir).select(
@@ -213,10 +207,6 @@ def corpus_keep_full_query(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             ),
         )
-        with ThreadPoolExecutor(len(tasks)) as ex:
-            base, spans, nov, lm_score = (
-                f.result() for f in [ex.submit(t) for t in tasks]
-            )
         keep_full = (
             F.col("keep")
             & (F.col("n_shared_windows") <= MAX_SHARED_WINDOWS)

@@ -25,10 +25,13 @@ oracle-checked, not just sampled.
 
 from __future__ import annotations
 
+from functools import partial, reduce
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import tables
+from ..pinning import build_concurrently
 from ..pinning import pin as _pin
 from ..pinning import shared_pin as _shared_pin
 from .textops import fingerprint_expr
@@ -1169,20 +1172,19 @@ def _tier_pairs(spark: SparkSession, sf_dir: str, tier: str) -> DataFrame:
     from four materialized id-pair tables. At cluster scale this is
     the per-detector pair stage-table every audit would read.
 
-    CONCURRENCY CONTRACT: dedup_tier_agreement and
-    blocking_recall_audit call this from a ThreadPoolExecutor so the
-    detectors' eager shared-pin materializations overlap as parallel
-    Spark jobs (measured 22.4s -> 9.9s for the recall audit). That
-    overlap is safe ONLY because every shared intermediate goes
-    through pinning.shared_pin, whose per-key double-checked lock
-    makes concurrent first-touch of the same key block-then-reuse
-    rather than double-build. If two threads nonetheless race a plain
-    ``pin``/``persist`` on the same frame the failure mode is benign
-    — Spark cache registration is idempotent; the loser logs an
-    "already cached" warning and reads the winner's cache — but it
-    DOUBLE-COMPUTES the materialization job. A refactor that swaps a
-    shared_pin for a plain pin here must either keep the builds
-    disjoint per thread or drop the executor."""
+    CONCURRENCY CONTRACT: the dedup audits call this through
+    ``pinning.build_concurrently`` so the detectors' eager shared-pin
+    materializations overlap as parallel Spark jobs (measured 22.4s
+    -> 9.9s for the recall audit). That overlap is safe ONLY because
+    every shared intermediate goes through pinning.shared_pin, whose
+    per-key double-checked lock makes concurrent first-touch of the
+    same key block-then-reuse rather than double-build. If two
+    threads nonetheless race a plain ``pin``/``persist`` on the same
+    frame the failure mode is benign — Spark cache registration is
+    idempotent; the loser logs an "already cached" warning and reads
+    the winner's cache — but it DOUBLE-COMPUTES the materialization
+    job. A refactor that swaps a shared_pin for a plain pin here must
+    either keep the builds disjoint per thread or build serially."""
     docs = tables.table(spark, sf_dir, "documents")
 
     def build() -> DataFrame:
@@ -1204,6 +1206,21 @@ def _tier_pairs(spark: SparkSession, sf_dir: str, tier: str) -> DataFrame:
 
     return _shared_pin(
         (f"dedup.tier_pairs.{tier}", tables.df_token(docs)), build
+    )
+
+
+def _tier_union(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_a, doc_b, tier): the four detectors' pair sets, tagged by
+    tier and built concurrently under ``_tier_pairs``' contract."""
+
+    def _tagged(t: str) -> DataFrame:
+        return _tier_pairs(spark, sf_dir, t).select(
+            "doc_a", "doc_b", F.lit(t).alias("tier")
+        )
+
+    return reduce(
+        DataFrame.unionByName,
+        build_concurrently(*(partial(_tagged, t) for t in _TIERS)),
     )
 
 
@@ -1253,19 +1270,18 @@ def dedup_tier_agreement_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     # construction costs more than the shingle-free chains' overlap
     # buys. See _tier_pairs' concurrency contract.)
     _shingle_table(docs)
-    from concurrent.futures import ThreadPoolExecutor
 
-    def _tagged(i_t: tuple[int, str]) -> DataFrame:
-        i, t = i_t
+    def _tagged(i: int, t: str) -> DataFrame:
         return _tier_pairs(spark, sf_dir, t).select(
             "doc_a", "doc_b", F.lit(1 << i).alias("bit")
         )
 
-    with ThreadPoolExecutor(len(_TIERS)) as ex:
-        parts = list(ex.map(_tagged, enumerate(_TIERS)))
-    tagged = parts[0]
-    for part in parts[1:]:
-        tagged = tagged.unionAll(part)
+    tagged = reduce(
+        DataFrame.unionAll,
+        build_concurrently(
+            *(partial(_tagged, i, t) for i, t in enumerate(_TIERS))
+        ),
+    )
     # Each tier emits a pair at most once, so sum(bit) IS the tier
     # membership bitmask; the mask histogram has at most 2^|tiers|=16
     # rows, and every count the audit reports is a conditional sum
@@ -2026,8 +2042,6 @@ def blocking_recall_audit_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (signatures -> candidates, capped index, simhash sigs) run as
     # overlapping Spark jobs instead of a serial chain — measured
     # 22.4s -> 9.9s solo at sf0.1 for this audit.
-    from concurrent.futures import ThreadPoolExecutor
-
     bits = dict(_BLOCKING_STRATEGIES, truth=1)
     # three of the six strategies ARE detector tiers — read the shared
     # tier-pair pins so the audit chain builds each pair set once
@@ -2044,11 +2058,10 @@ def blocking_recall_audit_query(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_a", "doc_b", F.lit(bits[name]).alias("bit")
         )
 
-    with ThreadPoolExecutor(len(gens)) as ex:
-        parts = list(ex.map(_tagged, gens))
-    tagged = parts[0]
-    for part in parts[1:]:
-        tagged = tagged.unionAll(part)
+    tagged = reduce(
+        DataFrame.unionAll,
+        build_concurrently(*(partial(_tagged, name) for name in gens)),
+    )
     hist = (
         tagged.groupBy("doc_a", "doc_b")
         .agg(F.sum("bit").alias("mask"))
@@ -2410,10 +2423,8 @@ def dedup_token_savings_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = tables.table(spark, sf_dir, "documents")
     _shingle_table(docs)  # warm the shared root pin once
-    from concurrent.futures import ThreadPoolExecutor
 
-    def _dropped(i_t: tuple[int, str]) -> DataFrame:
-        i, t = i_t
+    def _dropped(i: int, t: str) -> DataFrame:
         return (
             _tier_pairs(spark, sf_dir, t)
             .select(F.col("doc_b").alias("doc_id"))
@@ -2421,11 +2432,12 @@ def dedup_token_savings_query(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("doc_id", F.lit(1 << i).alias("bit"))
         )
 
-    with ThreadPoolExecutor(len(_TIERS)) as ex:
-        parts = list(ex.map(_dropped, enumerate(_TIERS)))
-    tagged = parts[0]
-    for part in parts[1:]:
-        tagged = tagged.unionAll(part)
+    tagged = reduce(
+        DataFrame.unionAll,
+        build_concurrently(
+            *(partial(_dropped, i, t) for i, t in enumerate(_TIERS))
+        ),
+    )
     toks = docs.select(
         "doc_id", F.size(tokens_expr()).cast("bigint").alias("nt")
     )
@@ -2969,19 +2981,7 @@ def detector_cochran_q_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     pins as dedup_tier_agreement (built concurrently under
     _tier_pairs' contract); the flag matrix and moments are
     id-pair-width rollups."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    def _tagged(it):
-        i, t = it
-        return _tier_pairs(spark, sf_dir, t).select(
-            "doc_a", "doc_b", F.lit(t).alias("tier")
-        )
-
-    with ThreadPoolExecutor(len(_TIERS)) as ex:
-        parts = list(ex.map(_tagged, enumerate(_TIERS)))
-    union = parts[0]
-    for p in parts[1:]:
-        union = union.unionByName(p)
+    union = _tier_union(spark, sf_dir)
     flags = union.groupBy("doc_a", "doc_b").agg(
         *[
             F.max((F.col("tier") == t).cast("int")).alias(f"x_{t}")
@@ -3104,19 +3104,7 @@ def fleiss_kappa_detectors_query(
     Scale: rides the SAME shared per-tier pair pins as the rest of
     the dedup-audit chain (_tier_pairs contract); everything after
     the flag matrix is a single-row reduction."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    def _tagged(it):
-        i, t = it
-        return _tier_pairs(spark, sf_dir, t).select(
-            "doc_a", "doc_b", F.lit(t).alias("tier")
-        )
-
-    with ThreadPoolExecutor(len(_TIERS)) as ex:
-        parts = list(ex.map(_tagged, enumerate(_TIERS)))
-    union = parts[0]
-    for p in parts[1:]:
-        union = union.unionByName(p)
+    union = _tier_union(spark, sf_dir)
     flags = union.groupBy("doc_a", "doc_b").agg(
         *[
             F.max((F.col("tier") == t).cast("int")).alias(f"x_{t}")
@@ -3259,23 +3247,11 @@ def kendall_w_detectors_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract); degrees are id-width rollups; midranks live on
     per-tier (distinct degree)-sized spines — bounded by the max dup
     degree, not the corpus."""
-    from concurrent.futures import ThreadPoolExecutor
-
     from pyspark.sql import Window as W
 
     docs_t = tables.table(spark, sf_dir, "documents")
     docs = docs_t.select("doc_id")
-
-    def _tagged(t):
-        return _tier_pairs(spark, sf_dir, t).select(
-            "doc_a", "doc_b", F.lit(t).alias("tier")
-        )
-
-    with ThreadPoolExecutor(len(_TIERS)) as ex:
-        parts = list(ex.map(_tagged, _TIERS))
-    union = parts[0]
-    for p in parts[1:]:
-        union = union.unionByName(p)
+    union = _tier_union(spark, sf_dir)
     deg = (
         union.select("tier", F.col("doc_a").alias("doc_id"))
         .unionByName(union.select("tier", F.col("doc_b").alias("doc_id")))

@@ -26,10 +26,15 @@ from __future__ import annotations
 
 import os
 import threading
+from collections.abc import Callable
 from contextlib import contextmanager
+from typing import TypeVar
 
+from pyspark import InheritableThread
 from pyspark.sql import DataFrame
 from pyspark.storagelevel import StorageLevel
+
+T = TypeVar("T")
 
 _PINNED: list[DataFrame] = []
 _SHARED: dict[object, DataFrame] = {}
@@ -142,6 +147,36 @@ def shared_pin(key, build) -> DataFrame:
         df = pin(build())
         _SHARED[key] = df
         return df
+
+
+def build_concurrently(*thunks: Callable[[], T]) -> list[T]:
+    """Run each thunk on its own thread and return their results in
+    thunk order. Composite queries use this to overlap independent
+    subtrees' eager pin jobs; concurrent first touches of one shared
+    intermediate are safe because ``shared_pin`` locks per key.
+
+    Each thread is a ``pyspark.InheritableThread``, so jobs it submits
+    carry the caller's Spark local properties (job group, job
+    description, scheduler pool). If a thunk raises, the first failure
+    in thunk order is re-raised once every thread has finished."""
+    results: list = [None] * len(thunks)
+    errors: list[Exception | None] = [None] * len(thunks)
+
+    def run(i: int) -> None:
+        try:
+            results[i] = thunks[i]()
+        except Exception as ex:  # re-raised after every thread joins
+            errors[i] = ex
+
+    threads = [InheritableThread(run, args=(i,)) for i in range(len(thunks))]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    for ex in errors:
+        if ex is not None:
+            raise ex
+    return results
 
 
 def unpersist_all(keep=None) -> int:

@@ -8,200 +8,28 @@
 Column names are aliased identically on both sides — the driver's
 compare sorts columns by name before hashing values.
 
-REGISTRATION ORDER IS LOAD-BEARING: the driver's correctness gate
-hash-checks the FIRST 50 registered queries each round, so the window
-rotates each round toward queries that have never had a driver
-CORRECTNESS row. Rotation history:
+REGISTRATION ORDER IS LOAD-BEARING:
 
-- r03 window: the LLM-data-pipeline tier (dedup, clustering,
-  similarity/ANN, spectral, stats, sketches, dq, curation, textops,
-  multimodal) — all 50 green in CORRECTNESS_r03.
-- r04 window (``_WINDOW_R04`` below): the round-3 additions (pq_*
-  family, temporal/CDC, kcore, BPE, feature/stats/dq additions,
-  capstones, agreement matrix) plus the round-4 scale forms
-  (token_budget_selection_2p, equi_depth_histogram_2p,
-  snapshot_diff_full) and the older judge-only queries — everything
-  green in r01-r03 rotates out and keeps tools/check_oracle.py +
-  pytest coverage.
+- The external correctness gate hash-checks the FIRST 50 queries of
+  ``queries()``. Those slots are exactly the current window
+  (``_WINDOW_R12``): the queries that still need a CORRECTNESS row.
+  ``_apply_window`` applies it as a reorder after all ``register()``
+  calls, so the registrations below stay grouped by family and every
+  rotation is a reviewable list diff.
+- Shared-pin families (``_PIN_FAMILIES``) run consecutively. A
+  family's in-window members sit adjacent inside the window; its
+  members outside the window follow the window as one block. bench.py
+  keeps a family's ``shared_pin`` roots warm from one member to the
+  next (``pin_family``).
 
-- r05 window (``_WINDOW_R05`` below): the COMPLETE 42-query
-  certification backlog (every round-4 addition, the older
-  judge-only tier, segment_trend, and embedding_quantize — reshaped
-  from ``array<int>`` to a csv string after its r04 canonicalizer
-  red) plus the eight round-5 additions (lexstats + segmentation
-  families). All 50 went GREEN in CORRECTNESS_r05.
-
-- r06 window (``_WINDOW_R06`` below): 50 of the 59-query round-5
-  late-addition backlog (registered after the r05 window froze),
-  prioritizing the heavier families per the r5 verdict: KN/bigram
-  LM, LOF/label-purity, FS linkage, blocking-recall audit,
-  int8/binary/matryoshka ANN + recall gates, privacy audits,
-  graph-structure audits. The 9 deferred to r07 (light single-pass
-  text/stat scans, all oracle-green locally): basket_triples,
-  char_entropy, charset_profile, phrase_search, resize_payload,
-  top_session_paths, transition_entropy, trimmed_mean_by_type,
-  zipf_fit.
-
-- r07 window (``_WINDOW_R07`` below): the full 28-slot mandate from
-  the r06 verdict — the 9 deferred light queries, the 17 round-6
-  additions, and 2 re-certifications (ivm_join_revenue after its
-  DECIMAL->BIGINT-cents output fix; dedup_tier_agreement after its
-  empty-pair left-join fix) — plus the 22 round-7 additions
-  (retrieval tier: ann_hubness_audit, kcenter_coreset,
-  maxsim_late_interaction, rocchio_expansion; drift tier:
-  ks_drift_audit, mmd_label_drift, ab_proportion_test,
-  simpson_reversal_audit, jl_projection_audit; stats/sketch:
-  theil_sen_trend, nelson_aalen_hazard, runs_test_randomness,
-  ams_f2_estimate, poisson_dispersion_audit, dp_clipped_mean;
-  text:
-  collocation_pmi, chao1_vocab_estimate; sampling:
-  group_kfold_split; layout: layout_locality_audit, bucket_plan;
-  dedup/sessions: dedup_representative_stats, session_concurrency).
-  Exactly 50 — no backlog deferred this round.
-
-- r08 window (``_WINDOW_R08`` below): no certification backlog existed
-  at the r07 freeze (CORRECTNESS_r07 went 50/50 green), so the window
-  is exactly 50 = (a) the 7 post-freeze round-7 additions tracked as
-  R08_MATERIAL (facility_location_coreset, detector_mcnemar,
-  rank_biased_overlap, label_purity_null_baseline, gate_ordering_plan,
-  waterfill_allocation, salt_factor_plan), (b) 4 re-certifications for
-  queries whose implementation changed in round 8 (kcenter_coreset's
-  fold-form self-dot, group_kfold_split/ams_f2_estimate's mod-2^31
-  hash pre-reduction — all ADVICE fixes — and session_concurrency's
-  segment-builder factoring for its streaming twin), and (c) the 39
-  round-8 additions: the nonparametric-inference tier, BH-FDR,
-  quantile normalization, the embedding-geometry tier (anisotropy,
-  Two-NN id, MRR, silhouette, centroid drift, PCA), the dedup/span
-  tier (multi-width spans, threshold sweeps, semantic keep,
-  capture-recapture, novelty decay), and the governance/selection
-  tier (HHI, LOO sensitivity, skyline, SRM, uniformity, temperature
-  mix, Hoeffding planner, clustering depth, local clustering
-  coefficient). ``_apply_window`` allows <=50 mid-round; the final
-  freeze landed at exactly 50.
-
-- r09 window (``_WINDOW_R09`` below): CORRECTNESS_r08 went 50/50
-  green, so the window is the 37-query R09_MATERIAL backlog (round-8
-  additions registered after the r08 freeze; all bit-exact in the
-  local sweep at BOTH sf0.01 and sf0.1 — SCALE.md cross-SF
-  certification record) + up to 13 slots for round-9 changed-impl
-  re-certifications, added as changes land. ``small_qty_revenue`` is
-  in the window as the mandated re-certification of the CHANGED
-  implementation (trade.py Q17 analog; the shadowed subqueries.py
-  variant was deleted this round and register() now raises on
-  duplicates). ``detector_cochran_q`` is placed LAST in the window
-  so the dedup-audit keep-scope chain stays consecutive:
-  _apply_window puts _DEDUP_AUDIT_CHAIN immediately after the
-  window, giving ... detector_cochran_q | dedup_tier_agreement ...
-
-- r10 window (``_WINDOW_R10`` below): CORRECTNESS_r09 went 50/50
-  green, clearing the backlog, so the window is exactly 50 = (a) the
-  7 R10_MATERIAL round-9 post-freeze additions, (b) the 17 stale
-  certifications flagged by ``tools/stale_cert_audit.py`` (the
-  round-10 automation of the r08 small_qty_revenue lesson: a green
-  row whose implementing function or oracle changed in a LATER
-  commit is no longer a certification — the audit diffs the exact
-  source segments through git history; knn_graph/knn_triangles/
-  containment_pairs were named in round 5's re-cert pool note below
-  but no window ever carried them), (c) the 6 queries whose physical
-  plan changed through the round-10 ``_tier_pairs`` shared-pin hoist
-  without their own function changing (the audit's documented
-  helper-change blind spot, covered manually: dedup_tier_agreement,
-  dedup_token_savings, detector_mcnemar, dup_capture_recapture,
-  detector_cochran_q, kendall_w_detectors), and (d) 20 age-based
-  re-validations — the oldest still-standing green rows (all r02),
-  oldest first per the r09 verdict. The dedup-audit chain members
-  sit LAST (consecutive, ``dedup_tier_agreement`` first; the exact
-  tail order need not match the ``_DEDUP_AUDIT_CHAIN`` constant) so
-  the family block (window tail + the one appended non-window
-  member) stays consecutive for the shared tier-pair pins.
-
-- r11 window (``_WINDOW_R11`` below): CORRECTNESS_r10 went 50/50
-  green and the round-11 ``stale_cert_audit`` run (after its ROUNDS
-  glob fix — the r10 verdict's #1 ask) flagged ZERO stale
-  certifications, so the window is exactly 50 = (a) the 5
-  R11_MATERIAL round-10 post-freeze additions
-  (kruskal_wallis_sources, brown_forsythe_lengths,
-  page_hinkley_drift, friedman_event_mix, wilcoxon_signed_rank),
-  (b) the 2 round-11 codec additions (codec_moments, codec_audit —
-  the real synthetic TIMG/TAUD decoder replacing the multimodal
-  ``decode="real"`` stub, r10 verdict ask #5), and (c) 43 age-based
-  re-validations: ALL 27 remaining r02-green rows plus the 16
-  alphabetically-first r03-green rows (text/dedup/ANN tier),
-  oldest round first. No chain member is in the window, so
-  ``_apply_window`` appends the whole dedup-audit family
-  immediately after slot 50 in constant order.
-
-- r12 window (``_WINDOW_R12`` below): CORRECTNESS_r11 went 50/50
-  green, so the window is the 13 R12_MATERIAL round-11 post-freeze
-  additions (the complete never-certified backlog) + 37 re-certs
-  chosen by the r11 verdict's ask #2 (plan-changed-in-r11 but not
-  driver-certified: the three iteration folds, the kNN/PQ ladders,
-  the curation/BPE and multimodal pins) and this round's own touches
-  (CC contraction -> the whole doc-graph family + linkage; the
-  shared-pinned strategy pair sets + both audits). Families sit in
-  the window as consecutive blocks; the embedding fragment is LAST so
-  ``_apply_window`` (which now appends ``_EMB_CHAIN`` first)
-  continues it across the boundary. The dedup audit+pairs family is
-  deliberately SPLIT: an 8-slot certified fragment in-window, the
-  other 14 members as their own consecutive block after the window —
-  one extra cold pin build per bench run instead of 22 window slots.
-
-NEXT ROTATION (round 13): no post-freeze additions exist this round
-(optimization rounds add no queries — R13_MATERIAL is empty), so the
-window is free for any r12 reds, the stale set from a fresh
-``tools/stale_cert_audit.py`` run, manual re-certs for helper-level
-changes the audit cannot see, and age-based fills (oldest green rows
-first: the remaining r03 rows, label_centroids onward
-alphabetically) up to 50. The r12-uncertified embedding-chain
-members that r11 changed but this window could not fit
-(pq_ann_rerank, ann_rank_fusion, mrr_audit, the recall ladder,
-dyn_ivf_assign, adamic_adar_links, local_clustering_coeff,
-ann_hubness_audit, label_purity_null_baseline, twonn_intrinsic_dim,
-ivf_assign and the cell audits) are the highest-value re-cert picks.
-Update tests/test_registry_window.py in the same commit as the
-freeze.
-
-PREVIOUS ROTATION NOTE (round 6, kept for the audit trail): the
-round-5 late additions
-registered after the r05 window was frozen (sequence_gap_audit,
-watermark_lag_audit, bigram_next_token, compaction_plan,
-join_key_skew, int8_ann, int8_ann_recall, prefix_filter_pairs,
-matryoshka_recall, cluster_cohesion, budget_allocation,
-winnowing_fingerprints, split_leakage_audit, epoch_interleave,
-char_entropy, l_diversity_audit, source_modularity,
-degree_assortativity, sorted_neighborhood_pairs,
-blocking_recall_audit, join_size_estimate, t_closeness_audit,
-resize_payload, systematic_weighted_sample,
-trimmed_mean_by_type, phrase_search, winnowing_pairs,
-bigram_lm_score, transition_entropy, binary_signatures,
-binary_ann, binary_ann_recall, kneser_ney_bigram,
-knn_lof_outliers, knn_label_purity, dp_laplace_counts,
-mutual_information, ivm_join_revenue, quantized_ann_ndcg,
-hll_rolling_distinct, charset_profile, bootstrap_se,
-dsir_importance, fs_linkage_scores, calibration_audit,
-hll_distinct_rollup, basket_triples, zipf_fit,
-nb_lang_confusion, pii_redact, km_user_survival,
-zone_map_skip_audit, source_ablation,
-rendezvous_reshard_audit, top_session_paths, batch_mix_audit,
-fd_audit, detector_kappa, ht_estimate_audit) plus
-round-6's own additions; fill the remaining slots with whichever
-certified queries changed implementation since their green row
-(re-certification beats re-running never-changed queries — in round
-5 that was ngram_jaccard_pairs, containment_pairs,
-dedup_tier_agreement, dedup_clusters, embedding_dup_clusters,
-cluster_keep_list, dup_pagerank (shared-pin / bitmask / active-set
-refactors) and kcore (broadcast-peel loop), all changed after their
-r04 green rows; late in round 5 knn_graph and knn_triangles changed
-too — their edge blocking moved from coarse IVF cells to the dynamic
-sub-quantizer after the 10x probe exposed the coarse-cell join as a
-hidden quadratic (145x at 10x; now ~1.3x) — so both join the
-re-certification pool; all oracle checks pass but a driver row
-re-certifies). Update tests/test_registry_window.py in the same
-commit.
-
-The window is applied as an explicit reorder (``_WINDOW_R07``) after
-all register() calls, so the family grouping of the code below never
-has to move and every rotation is a reviewable list diff.
+To rotate the window, replace the list with the next 50: never-
+certified queries first, then the stale set from
+``tools/stale_cert_audit.py``, then the oldest green rows. Keep each
+family's in-window members adjacent, put a family that straddles the
+boundary last (``_apply_window`` continues the first-declared family
+right after the window), and update tests/test_registry_window.py in
+the same commit. Git history keeps the earlier windows and their
+rationale.
 """
 
 from __future__ import annotations
@@ -249,83 +77,10 @@ def oracle_sql() -> dict[str, str]:
 
 _LOADED = False
 
-# Driver correctness window for round 10 (slots 0..49) — see module
-# docstring: 7 R10_MATERIAL + 17 stale-cert-audit flags + 6 manual
-# helper-change re-certs + 20 age-based re-validations, grouped by
-# family so janino/codegen first-touch amortizes across neighbors.
-_WINDOW_R10 = [
-    # lexical / text tier (material + stale textops)
-    "tail_token_share",
-    "log_odds_terms",
-    "lexicon_gate_audit",
-    "tfidf_top_terms",
-    "vocab_coverage",
-    # stats / data-quality tier
-    "weighted_median_price",
-    "correlation_matrix",
-    "event_anomalies",
-    "benford_audit",
-    "referential_integrity",
-    # sales / events analytics re-validation (oldest green rows, r02)
-    "active_rich_customers",
-    "asof_prev_purchase",
-    "click_no_purchase_days",
-    "customer_balance_quartiles",
-    "customers_with_open_orders",
-    "customers_without_orders",
-    "error_and_signup_days",
-    "events_hopping",
-    "events_hourly",
-    "events_pivot",
-    "events_unpivot",
-    "funnel_conversion",
-    "json_enrich",
-    "json_props_stats",
-    # TPC-H analog tier (stale + oldest green rows)
-    "bulk_part_suppliers",
-    "brand_disjunction_revenue",
-    "cust_order_counts",
-    "idle_rich_customers",
-    "min_cost_supplier",
-    "important_part_values",
-    "large_volume_customers",
-    "late_order_priority",
-    # multimodal
-    "multimodal_features",
-    # embedding / graph tier
-    "v_measure_cells",
-    "recall_at_k_curve",
-    "participation_ratio",
-    "pca_top_component",
-    "knn_graph",
-    "knn_triangles",
-    "kcore",
-    # dedup tier
-    "containment_pairs",
-    # dedup-audit chain members — LAST, consecutive, and with
-    # dedup_tier_agreement first on purpose (the exact tail order
-    # need not match _DEDUP_AUDIT_CHAIN's constant order; the tests
-    # require only consecutiveness and the first member):
-    # _apply_window appends the remaining chain member
-    # (minhash_estimate_audit) immediately after the window, so the
-    # whole family is one consecutive shared-pin block
-    "dedup_tier_agreement",
-    "dedup_token_savings",
-    "source_dedup_matrix",
-    "blocking_recall_audit",
-    "detector_kappa",
-    "detector_mcnemar",
-    "dup_capture_recapture",
-    "detector_cochran_q",
-    "kendall_w_detectors",
-]
-
-# Driver correctness window for round 11 (slots 0..49) — see module
-# docstring: 5 R11_MATERIAL + 2 codec additions + 43 age-based
-# re-validations (all 27 remaining r02 rows + 16 oldest r03 rows),
-# grouped by family so janino/codegen first-touch amortizes across
-# neighbors. Zero stale-audit flags this round (the audit now globs
-# CORRECTNESS_r*.json, so the r10 rows count).
+# Correctness window for round 12 (slots 0..49): the 13
+# never-certified round-11 additions + 37 re-certifications of queries
+# whose plans changed in rounds 11-12, grouped by family so janino
+# first-touch and shared pins amortize across neighbors.
 _WINDOW_R12 = [
     # --- never-certified backlog: the 13 R12_MATERIAL round-11
     # post-freeze additions (nonparametric/association ladder + the
@@ -391,7 +146,7 @@ _WINDOW_R12 = [
     "sorted_neighborhood_pairs",
     "winnowing_pairs",
     # --- embedding/ANN fragment, LAST on purpose: _apply_window
-    # appends the rest of _EMB_CHAIN immediately after the window, so
+    # appends the rest of the sim. family right after the window, so
     # the family runs back-to-back across the boundary and the sim.*
     # pins build once (the r11 dedup_clusters/dup_pagerank straddle
     # pattern, moved to the costlier family). Members chosen per the
@@ -409,637 +164,164 @@ _WINDOW_R12 = [
     "semantic_dedup_keep",
 ]
 
-_WINDOW_R11 = [
-    # inference / drift tier (R11_MATERIAL)
-    "kruskal_wallis_sources",
-    "brown_forsythe_lengths",
-    "friedman_event_mix",
-    "wilcoxon_signed_rank",
-    "page_hinkley_drift",
-    # codec tier (round-11 additions)
-    "codec_moments",
-    "codec_audit",
-    # parity / events re-validation (r02 rows)
-    "uppercase",
-    "wordcount",
-    "wordcount_point_lookup",
-    "purchases_agg",
-    "purchases_range_scan",
-    "user_event_type_sets",
-    "user_sessions",
-    "retention_cohorts",
-    "rolling_user_value",
-    "revenue_forecast",
-    # TPC-H analog / sales re-validation (r02 rows)
-    "latest_shipper_counts",
-    "local_supplier_revenue",
-    "market_share",
-    "pricing_summary",
-    "product_profit",
-    "promo_revenue",
-    "returned_items_top_customers",
-    "revenue_cube",
-    "revenue_grouping_sets",
-    "revenue_rollup",
-    "shipping_priority",
-    "shipping_speed_priority",
-    "supplier_part_variety",
-    "top_orders_per_customer",
-    "top_revenue_supplier",
-    "top_value_parts",
-    "volume_shipping",
-    # text / dedup / ANN tier re-validation (oldest r03 rows)
-    "ann_topk",
-    "approx_distinct_users",
-    "approx_percentiles",
-    "bm25_search",
-    "boilerplate_ngrams",
-    "bpe_merge_candidates",
-    "chunk_packing",
-    "clean_text",
-    "corpus_keep",
-    "data_quality_audit",
-    "distinct_users_daily",
-    "doc_chunks",
-    "doc_fingerprint",
-    "doc_repetition",
-    # LAST two on purpose (round-11 optimization): both are members
-    # of the SimHash doc-graph family, and _apply_window places
-    # _GRAPH_CHAIN immediately after the window — so the family runs
-    # back-to-back across the window boundary and the graph.* shared
-    # pins (edge list, undirected table, CC labels, PageRank vector)
-    # build once for all nine members. Window MEMBERSHIP is unchanged
-    # from the freeze; only the order inside the 50 moved, which the
-    # driver's prefix gate does not care about.
-    "dedup_clusters",
-    "dup_pagerank",
+# Shared-pin families. Each entry is (keep-prefixes, ordered members):
+# the members derive the same ``pinning.shared_pin`` roots, whose keys
+# start with one of the prefixes. Membership was measured by tracking
+# shared_pin keys over every registered query (OPTIMIZATION_r11.md).
+# ``_apply_window`` places each family's out-of-window members right
+# after the window, in this order; ``pin_family`` serves bench.py's
+# keep-scope.
+_PIN_FAMILIES: list[tuple[tuple[str, ...], list[str]]] = [
+    # Embedding / ANN: quantizer assignment, exact top-k reference,
+    # kNN edge list, PQ codebook/ADC, near-dup pairs and the embedding
+    # CC labels. First, so it continues the window's trailing
+    # embedding fragment across the boundary.
+    (
+        ("sim.",),
+        [
+            # coarse-assignment consumers (sim.assign builds here)
+            "ivf_assign",
+            "embedding_outliers",
+            "ncc_confusion",
+            "cell_label_gini",
+            "v_measure_cells",
+            # IVF search + audits (sim.ann_topk builds at first consumer)
+            "ivf_ann",
+            "ivf_probe_recall_curve",
+            "mrr_audit",
+            # recall ladder over the exact reference
+            "lsh_ann_recall",
+            "lsh_multiprobe_recall",
+            "matryoshka_recall",
+            "recall_at_k_curve",
+            "int8_ann_recall",
+            "binary_ann_recall",
+            "quantized_ann_ndcg",
+            "rank_biased_overlap",
+            # PQ tier (sim.pq_codebook / sim.pq_adc build here)
+            "pq_codes",
+            "pq_ann",
+            "pq_ann_rerank",
+            "pq_recall",
+            "ann_rank_fusion",
+            # dynamic sub-quantizer + kNN graph tier (sim.dyn_assign /
+            # sim.knn_edges build here)
+            "dyn_ivf_assign",
+            "knn_graph",
+            "knn_triangles",
+            "knn_lof_outliers",
+            "knn_label_purity",
+            "adamic_adar_links",
+            "local_clustering_coeff",
+            "ann_hubness_audit",
+            "label_purity_null_baseline",
+            "twonn_intrinsic_dim",
+            # near-dup pairs + embedding CC (sim.near_dup_edges / sim.emb_cc)
+            "ivf_near_dup",
+            "embedding_dup_clusters",
+            "semantic_dedup_keep",
+        ],
+    ),
+    # Dedup audits over the four detectors' shared tier-pair pins,
+    # then the second-tier pair detectors and linkage, which read the
+    # same shingle/signature/candidate pins.
+    (
+        ("dedup.",),
+        [
+            "dedup_tier_agreement",
+            "dedup_token_savings",
+            "source_dedup_matrix",
+            "minhash_estimate_audit",
+            "blocking_recall_audit",
+            "detector_kappa",
+            "detector_cochran_q",
+            "kendall_w_detectors",
+            "detector_mcnemar",
+            "dup_capture_recapture",
+            "fleiss_kappa_detectors",
+            "lsh_param_plan",
+            "minhash_lsh_pairs",
+            "edit_distance_pairs",
+            "fs_linkage_scores",
+            "linkage_entities",
+            "containment_pairs",
+            "ngram_jaccard_pairs",
+            "split_leakage_audit",
+            "sorted_neighborhood_pairs",
+            "prefix_filter_pairs",
+            "winnowing_pairs",
+        ],
+    ),
+    # SimHash doc graph: edge list, undirected table, CC labels and
+    # PageRank vector, all built by dedup_clusters / dup_pagerank.
+    (
+        ("graph.",),
+        [
+            "dedup_clusters",
+            "dup_pagerank",
+            "dedup_representative_stats",
+            "contrastive_collision",
+            "cluster_keep_list",
+            "dup_graph_degrees",
+            "kcore",
+            "source_modularity",
+            "degree_assortativity",
+        ],
+    ),
+    # Curation keep-gates and the trained BPE artifact; corpus_keep
+    # builds the cur.keep pin that corpus_keep_full reads.
+    (
+        ("cur.", "bpe."),
+        [
+            "corpus_keep",
+            "corpus_keep_full",
+            "bpe_train",
+            "bpe_encode",
+            "bpe_doc_tokens",
+            "training_manifest",
+        ],
+    ),
+    # Multimodal: the perceptual-hash table feeds the pair detector
+    # and the threshold sweep; the codec pair shares the mm.payload
+    # encode pin.
+    (
+        ("mm.",),
+        [
+            "payload_phash",
+            "phash_dup_pairs",
+            "phash_threshold_sweep",
+            "codec_moments",
+            "codec_audit",
+        ],
+    ),
 ]
 
-# Round-11 optimization chains (the dedup-audit keep-scope pattern
-# generalized): each list is a family of registered queries that
-# derive from the same shared_pin roots, kept CONSECUTIVE in registry
-# order so bench.py can hold the family's pins warm across the block.
-# Membership was measured, not guessed: tools-instrumented shared_pin
-# key tracking over every registered query (see OPTIMIZATION_r11.md).
+_FAMILY_OF = {n: prefixes for prefixes, ms in _PIN_FAMILIES for n in ms}
 
-# SimHash doc-graph family (graph.* pins) — continues the window's
-# dedup_clusters / dup_pagerank tail.
-_GRAPH_CHAIN = [
-    "dedup_representative_stats",
-    "contrastive_collision",
-    "cluster_keep_list",
-    "dup_graph_degrees",
-    "kcore",
-    "source_modularity",
-    "degree_assortativity",
-]
 
-# Second-tier dedup.* consumers (pair detectors and linkage outside
-# the audit chain): they read the same shingle/signature/candidate
-# pins the audit family builds, so they run as a continuation of that
-# block under the same "dedup." keep-scope.
-_DEDUP_PAIRS_CHAIN = [
-    "minhash_lsh_pairs",
-    "edit_distance_pairs",
-    "fs_linkage_scores",
-    "linkage_entities",
-    "containment_pairs",
-    "ngram_jaccard_pairs",
-    "split_leakage_audit",
-    "sorted_neighborhood_pairs",
-    "prefix_filter_pairs",
-    "winnowing_pairs",
-]
-
-# Curation / BPE family (cur.* / bpe.* pins): the keep-gate
-# compositions and the trained-tokenizer artifact. corpus_keep itself
-# sits in the r11 window; corpus_keep_full rebuilds the cur.keep pin
-# inside its own slot.
-_CUR_CHAIN = [
-    "corpus_keep_full",
-    "bpe_train",
-    "bpe_encode",
-    "bpe_doc_tokens",
-    "training_manifest",
-]
-
-# Multimodal perceptual-hash family (mm.* pins): the fingerprint
-# table feeds the pair detector (both posting sides) and the
-# threshold sweep. codec_moments / codec_audit share the mm.payload
-# encode pin too, but they sit ADJACENT in the r11 window (slots
-# 5-6), so bench.py's family set covers them there.
-_MM_CHAIN = [
-    "payload_phash",
-    "phash_dup_pairs",
-    "phash_threshold_sweep",
-]
-
-# Embedding / ANN family (sim.* pins): quantizer assignment, exact
-# top-k reference, kNN edge list, PQ codebook/ADC, near-dup pairs and
-# the embedding CC labels. ann_topk itself sits in the r11 window, so
-# its pin rebuilds once inside this block (first consumer).
-_EMB_CHAIN = [
-    # coarse-assignment consumers (sim.assign builds here)
-    "ivf_assign",
-    "embedding_outliers",
-    "ncc_confusion",
-    "cell_label_gini",
-    "v_measure_cells",
-    # IVF search + audits (sim.ann_topk builds at first consumer)
-    "ivf_ann",
-    "ivf_probe_recall_curve",
-    "mrr_audit",
-    # recall ladder over the exact reference
-    "lsh_ann_recall",
-    "lsh_multiprobe_recall",
-    "matryoshka_recall",
-    "recall_at_k_curve",
-    "int8_ann_recall",
-    "binary_ann_recall",
-    "quantized_ann_ndcg",
-    "rank_biased_overlap",
-    # PQ tier (sim.pq_codebook / sim.pq_adc build here)
-    "pq_codes",
-    "pq_ann",
-    "pq_ann_rerank",
-    "pq_recall",
-    "ann_rank_fusion",
-    # dynamic sub-quantizer + kNN graph tier (sim.dyn_assign /
-    # sim.knn_edges build here)
-    "dyn_ivf_assign",
-    "knn_graph",
-    "knn_triangles",
-    "knn_lof_outliers",
-    "knn_label_purity",
-    "adamic_adar_links",
-    "local_clustering_coeff",
-    "ann_hubness_audit",
-    "label_purity_null_baseline",
-    "twonn_intrinsic_dim",
-    # near-dup pairs + embedding CC (sim.near_dup_edges / sim.emb_cc)
-    "ivf_near_dup",
-    "embedding_dup_clusters",
-    "semantic_dedup_keep",
-]
-
-# r09 window kept for the rotation-history tests (50/50 green in
-# CORRECTNESS_r09). Was: the complete 37-query never-certified backlog
-# (R09_MATERIAL), grouped by family so janino/codegen first-touch
-# amortized across neighbors, + the mandated small_qty_revenue
-# re-certification.
-_WINDOW_R09 = [
-    # experimentation / drift tier
-    "js_source_drift",
-    "psi_drift_score",
-    "cuped_uplift",
-    "did_uplift",
-    "sprt_daily_decision",
-    "smd_balance_audit",
-    "qq_shift_profile",
-    # lexical / LM tier
-    "good_turing_unseen",
-    "burrows_delta",
-    "token_entropy",
-    "hill_tail_index",
-    # time-series / trend tier
-    "interarrival_burstiness",
-    "theil_sen_ci",
-    "cross_correlation_lags",
-    "binseg_changepoints",
-    "markov_stationary",
-    # survival / queueing tier
-    "logrank_cohorts",
-    "littles_law_audit",
-    # planning tier
-    "gate_ordering_cost_plan",
-    "nzv_dimension_audit",
-    # sales analytics / TPC-H analog completions (small_qty_revenue is
-    # the mandated changed-impl re-certification — trade.py Q17)
-    "cust_order_dist",
-    "promo_revenue_share",
-    "small_qty_revenue",
-    "branded_basket_revenue",
-    "discount_elasticity",
-    "revenue_attribution",
-    "lorenz_curve_points",
-    "new_vs_returning_daily",
-    "audience_overlap",
-    "activity_streaks",
-    "fulfillment_lag",
-    # embedding / cluster-quality tier
-    "davies_bouldin",
-    "cell_label_gini",
-    "contrastive_collision",
-    "ncc_confusion",
-    "adamic_adar_links",
-    # detector tier — LAST on purpose: _apply_window places
-    # _DEDUP_AUDIT_CHAIN immediately after the window, so the shared
-    # dedup-tier pins stay adjacent (r6 verdict's triple-pay fix)
-    "detector_cochran_q",
-]
-
-# r08 window kept for the rotation-history tests (50/50 green in
-# CORRECTNESS_r08). Was: the 7 R08_MATERIAL queries + 4 changed-impl
-# re-certifications + the 39 round-8 additions, grouped by family so
-# janino/codegen first-touch amortized across neighbors.
-_WINDOW_R08 = [
-    # retrieval / ranking tier (r7 post-freeze material)
-    "facility_location_coreset",
-    "rank_biased_overlap",
-    # detector / label audits
-    "detector_mcnemar",
-    "label_purity_null_baseline",
-    # planning tier
-    "gate_ordering_plan",
-    "waterfill_allocation",
-    "salt_factor_plan",
-    # re-certifications: implementation changed after the green r07
-    # row (round-8 ADVICE fixes — kcenter's fold-form self-dot, the
-    # mod-2^31 pre-reduction in the kfold/AMS hash arithmetic)
-    "kcenter_coreset",
-    "group_kfold_split",
-    "ams_f2_estimate",
-    # round-8 additions: nonparametric inference tier
-    "mann_whitney_audit",
-    "kendall_tau_trend",
-    "spearman_trend",
-    "cvm_drift_audit",
-    "pettitt_changepoint",
-    "wilson_ci_segments",
-    "eb_rate_shrinkage",
-    "cramers_v_association",
-    "hodges_lehmann_shift",
-    "source_concentration_audit",
-    # round-8 additions: embedding-geometry tier
-    "embedding_anisotropy_audit",
-    "twonn_intrinsic_dim",
-    "mrr_audit",
-    # round-8 additions: dedup / span tier
-    "multiwidth_span_profile",
-    "simhash_threshold_sweep",
-    "semantic_dedup_keep",
-    # round-8 additions: layout / mixture / graph tier
-    "clustering_depth_audit",
-    "sqrt_temperature_mix",
-    "local_clustering_coeff",
-    # round-8 additions: calibration / multiple-testing / time-series
-    "quantile_normalize_map",
-    "bh_fdr_drift_gates",
-    "ljung_box_stat",
-    # re-certification: segment builder factored out for the streaming
-    # twin (session_day_segments) — plan-identical, but touched
-    "session_concurrency",
-    # round-8 additions: trend/governance/selection tier
-    "mann_kendall_trend",
-    "dup_capture_recapture",
-    "loo_source_sensitivity",
-    "skyline_quality_length",
-    "split_srm_check",
-    "welch_t_audit",
-    "cochran_armitage_trend",
-    "phash_threshold_sweep",
-    "pca_top_component",
-    "hash_bucket_uniformity",
-    "ivf_margin_audit",
-    "novelty_decay_curve",
-    "anova_source_lengths",
-    "simplified_silhouette",
-    "centroid_shift_drift",
-    "sample_size_epsilon_plan",
-    "label_anisotropy_audit",
-]
-
-# The dedup-audit family must stay CONSECUTIVE in registration order
-# for bench.py's keep-scope pin sharing (the r6 verdict's triple-pay
-# fix: consecutive members read the first member's dedup.* shared-pin
-# materializations; measured 29% family reduction). In r07 the window
-# itself provided the adjacency; with those queries rotated out of
-# _WINDOW_R08, _apply_window now places this chain immediately AFTER
-# the window (slots 50+, outside the driver's hash-checked prefix).
-_DEDUP_AUDIT_CHAIN = [
-    "dedup_tier_agreement",
-    "dedup_token_savings",
-    "source_dedup_matrix",
-    "minhash_estimate_audit",
-    "blocking_recall_audit",
-    "detector_kappa",
-    # In the r09 window (placed LAST there); listed here for family
-    # documentation — _apply_window skips names already in the window,
-    # so the remaining members land immediately after it: the window
-    # tail plus this chain form one consecutive shared-pin run.
-    "detector_cochran_q",
-    # round-9 addition (R10 material) riding the same shared tier
-    # pins; placed in the chain so its four detector derivations read
-    # the family's warm materializations in bench order
-    "kendall_w_detectors",
-    # round-10 additions to the family: both consume the shared
-    # per-tier pair pins (_tier_pairs is itself a shared pin as of
-    # round 10), so they belong in the consecutive keep-scope block
-    "detector_mcnemar",
-    "dup_capture_recapture",
-    # round-11 post-freeze addition: Fleiss' kappa reads the same
-    # four tier-pair pins, so it joins the consecutive keep-scope
-    # block (last — every earlier member's pins stay warm for it)
-    "fleiss_kappa_detectors",
-    # round-11 post-freeze addition: the banding planner reads the
-    # shared minhash-signature pin, so it rides the block too
-    "lsh_param_plan",
-]
-
-# r07 window kept for the rotation-history tests (50/50 green in
-# CORRECTNESS_r07). Was exactly: the 9 queries deferred from the r06
-# window + the 17 round-6 additions + 2 re-certifications
-# (ivm_join_revenue, dedup_tier_agreement) + the 22 round-7 additions.
-_WINDOW_R07 = [
-    # text / lexical tier (deferred lights + round-7 additions)
-    "collocation_pmi",
-    "chao1_vocab_estimate",
-    "char_entropy",
-    "transition_entropy",
-    "charset_profile",
-    "phrase_search",
-    "zipf_fit",
-    "top_session_paths",
-    "basket_triples",
-    "trimmed_mean_by_type",
-    "resize_payload",
-    # embedding / retrieval tier
-    "ann_hubness_audit",
-    "kcenter_coreset",
-    "maxsim_late_interaction",
-    "rocchio_expansion",
-    "mmr_rerank",
-    "ivf_probe_recall_curve",
-    "jl_projection_audit",
-    "mmd_label_drift",
-    # multimodal fingerprints
-    "payload_phash",
-    "phash_dup_pairs",
-    # dedup / linkage ROI tier
-    # order inside this family is load-bearing for bench.py's
-    # keep-scope pin sharing: the dedup.* shared roots survive only
-    # across CONSECUTIVE family members, so the outsider
-    # (source_similarity_matrix, a textops query) runs after
-    # minhash_estimate_audit rather than splitting the chain
-    "dedup_tier_agreement",
-    "dedup_token_savings",
-    "source_dedup_matrix",
-    "minhash_estimate_audit",
-    "source_similarity_matrix",
-    "dedup_representative_stats",
-    "linkage_entities",
-    # sampling / privacy tier
-    "priority_sample",
-    "weighted_priority_sample",
-    "neyman_allocation",
-    "group_kfold_split",
-    "curriculum_pacing",
-    "conformal_coverage_audit",
-    "dp_topk_release",
-    "dp_clipped_mean",
-    # statistics / estimation tier
-    "theil_sen_trend",
-    "nelson_aalen_hazard",
-    "runs_test_randomness",
-    "ab_proportion_test",
-    "simpson_reversal_audit",
-    "ks_drift_audit",
-    "ams_f2_estimate",
-    "poisson_dispersion_audit",
-    # layout / sessions
-    "hilbert_layout",
-    "layout_locality_audit",
-    "bucket_plan",
-    "session_concurrency",
-    # relational / IVM
-    "idle_customer_balance",
-    "ivm_join_revenue",
-]
-
-# r06 window kept for the rotation-history tests (49 of 50 went green
-# in CORRECTNESS_r06; ivm_join_revenue re-certifies in r07).
-_WINDOW_R06 = [
-    # LM / tokenizer tier (heaviest janino shapes first-touch here)
-    "kneser_ney_bigram",
-    "bigram_lm_score",
-    "bigram_next_token",
-    "dsir_importance",
-    "mutual_information",
-    # ANN quantization tiers + recall/quality gates
-    "int8_ann",
-    "int8_ann_recall",
-    "binary_signatures",
-    "binary_ann",
-    "binary_ann_recall",
-    "matryoshka_recall",
-    "quantized_ann_ndcg",
-    # kNN-graph analytics
-    "knn_lof_outliers",
-    "knn_label_purity",
-    "cluster_cohesion",
-    # record linkage + blocking strategies + their recall audit
-    "fs_linkage_scores",
-    "prefix_filter_pairs",
-    "sorted_neighborhood_pairs",
-    "winnowing_fingerprints",
-    "winnowing_pairs",
-    "blocking_recall_audit",
-    "detector_kappa",
-    # graph-structure audits
-    "source_modularity",
-    "degree_assortativity",
-    # privacy tier
-    "l_diversity_audit",
-    "t_closeness_audit",
-    "dp_laplace_counts",
-    "pii_redact",
-    # sketches: rolling / rollup HLL
-    "hll_rolling_distinct",
-    "hll_distinct_rollup",
-    # sampling / estimation / statistics
-    "systematic_weighted_sample",
-    "ht_estimate_audit",
-    "bootstrap_se",
-    "km_user_survival",
-    "calibration_audit",
-    "nb_lang_confusion",
-    # streaming-adjacent event-time audits
-    "sequence_gap_audit",
-    "watermark_lag_audit",
-    # layout / planning / skew audits
-    "compaction_plan",
-    "join_key_skew",
-    "join_size_estimate",
-    "zone_map_skip_audit",
-    "rendezvous_reshard_audit",
-    # training-mix / curation audits
-    "split_leakage_audit",
-    "epoch_interleave",
-    "budget_allocation",
-    "source_ablation",
-    "batch_mix_audit",
-    "fd_audit",
-    # IVM
-    "ivm_join_revenue",
-]
-
-# r05 window kept for the rotation-history tests (all 50 went green
-# in CORRECTNESS_r05; see the module docstring's audit trail).
-_WINDOW_R05 = [
-    # round-4 additions: stats / dq / sketches
-    "referential_integrity",
-    "seasonal_anomalies",
-    "ewma_user_value",
-    "ab_test_chi2",
-    "cusum_changepoint",
-    "weekly_autocorr",
-    "segment_trend",
-    "k_anonymity_audit",
-    "freshness_audit",
-    "enum_domain_audit",
-    "cms_user_counts",
-    "bloom_filter_audit",
-    "hll_user_sketch",
-    "kmv_overlap",
-    # round-4 additions: analytics / layout / similarity / chunking
-    "basket_pairs",
-    "ann_rank_fusion",
-    "zorder_layout",
-    "vocab_growth",
-    "readability",
-    "last_touch_attribution",
-    "session_window_stats",
-    "debounce_events",
-    "pit_dimension_join",
-    "payload_chunks_fixed",
-    # reshaped after the r04 canonicalizer red (array -> csv string)
-    "embedding_quantize",
-    # older judge-only tier: text / LM / dedup / clustering
-    "token_rarity",
-    "unigram_lm_score",
-    "source_kl_divergence",
-    "quality_weighted_sample",
-    "shared_substrings",
-    "substring_dup_docs",
-    "cluster_keep_list",
-    "heavy_hitters",
-    "frame_sample",
-    # older judge-only tier: sampling / skew / changelog / range joins
-    "dataset_split",
-    "stratified_sample",
-    "mixture_sample",
-    "source_cap",
-    "purchases_agg_salted",
-    "ktable_latest",
-    "prior_clicks_before_error",
-    "error_window_counts",
-    # round-5 additions: lexical statistics + customer segmentation
-    "hapax_rate",
-    "tokenizer_fertility",
-    "term_cooccurrence",
-    "doclen_log_hist",
-    "prefix_dup_groups",
-    "rfm_segments",
-    "spend_gini",
-    "order_gap_stats",
-]
-
-# r04 window kept for the rotation-history tests and so the docstring's
-# audit trail stays executable documentation.
-_WINDOW_R04 = [
-    # BPE tokenizer family
-    "bpe_train",
-    "bpe_encode",
-    "bpe_doc_tokens",
-    # graph / dedup additions
-    "kcore",
-    "edit_distance_pairs",
-    "line_dedup",
-    "incremental_dedup",
-    "containment_pairs",
-    "doc_ngram_novelty",
-    "dedup_tier_agreement",
-    "dup_graph_degrees",
-    "knn_triangles",
-    # product quantization stack
-    "pq_codes",
-    "pq_ann",
-    "pq_ann_rerank",
-    "pq_recall",
-    # embedding quantization + multiprobe LSH
-    "embedding_quantize",
-    "quantization_error",
-    "lsh_multiprobe",
-    "lsh_multiprobe_recall",
-    # temporal / CDC / IVM
-    "scd2_history",
-    "gap_fill_daily",
-    "snapshot_diff",
-    "snapshot_diff_full",
-    "ivm_status_counts",
-    # sketches + scale forms
-    "equi_depth_histogram",
-    "equi_depth_histogram_2p",
-    "token_budget_selection",
-    "token_budget_selection_2p",
-    "pareto_orders",
-    # features / stats / dq
-    "target_encoding",
-    "feature_hashing",
-    "correlation_matrix",
-    "table_profile",
-    "distribution_drift",
-    "benford_audit",
-    "robust_event_outliers",
-    "segment_spend_quantiles",
-    # analytics additions
-    "ltv_cohorts",
-    "funnel_within_window",
-    "activity_heatmap",
-    "stickiness_weekly",
-    "event_transitions",
-    # text / search additions
-    "inverted_index",
-    "lang_confusion",
-    "source_distinctive_terms",
-    # curation capstones + mixtures
-    "training_manifest",
-    "corpus_keep_full",
-    "quality_tiers",
-    "mixture_weights",
-]
+def pin_family(name: str | None) -> tuple[str, ...]:
+    """Keep-prefixes of the shared-pin family ``name`` belongs to, or
+    ``()`` when it belongs to none."""
+    return _FAMILY_OF.get(name, ())
 
 
 def _apply_window(window: list[str]) -> None:
     """Reorder the registry so ``window`` occupies slots 0-49 (the
-    driver's hash-checked prefix) and everything else follows in its
-    original family order. Fails loudly on a typo or a window entry
+    gate's hash-checked prefix), each shared-pin family's remaining
+    members follow as one block, and everything else keeps its
+    registration order. Fails loudly on a typo or a window entry
     missing its oracle — a silent miss would waste a driver round."""
     missing = [n for n in window if n not in _QUERIES]
     assert not missing, f"window names not registered: {missing}"
     no_oracle = [n for n in window if n not in _ORACLES]
     assert not no_oracle, f"window names lack oracles: {no_oracle}"
-    # The driver hash-checks the first 50 slots. The window may run
-    # SHORT of 50 mid-round (r08+): the extra prefix slots then fall
-    # to already-green families, which re-check harmlessly. It must
-    # never exceed 50 — a 51st entry would silently skip the gate.
+    # The window may run short of 50 (the extra prefix slots then fall
+    # to already-green queries); a 51st entry would silently skip the
+    # gate.
     assert len(window) == len(set(window)) <= 50, len(window)
     ordered = {n: _QUERIES[n] for n in window}
-    # keep-scope adjacency: each shared-pin family runs back-to-back.
-    # _EMB_CHAIN first (round 12) — it CONTINUES the window's trailing
-    # embedding/ANN fragment, so the sim.* pins stay warm across the
-    # window boundary; then the dedup audit+pairs families (their
-    # window fragment is separate — see _WINDOW_R12's dedup block
-    # note), then the fully-in-window families (no-ops this round).
-    for chain in (
-        _EMB_CHAIN,
-        _DEDUP_AUDIT_CHAIN,
-        _DEDUP_PAIRS_CHAIN,
-        _GRAPH_CHAIN,
-        _CUR_CHAIN,
-        _MM_CHAIN,
-    ):
-        for n in chain:
+    for _, members in _PIN_FAMILIES:
+        for n in members:
             if n in _QUERIES and n not in ordered:
                 ordered[n] = _QUERIES[n]
     for n, fn in _QUERIES.items():
@@ -1056,7 +338,7 @@ def _ensure_loaded() -> None:
 
     # ---------------------------------------------------------------
     # Registrations are grouped by FAMILY; the driver window is
-    # applied as a reorder at the end (_apply_window(_WINDOW_R04)).
+    # applied as a reorder at the end (_apply_window).
     # ---------------------------------------------------------------
 
     from .operators import clustering, dedup, similarity, spectral
@@ -2926,7 +2208,7 @@ def _ensure_loaded() -> None:
         dedup.KENDALL_W_DETECTORS_ORACLE,
     )
 
-    # ---- round-11 additions (pre-freeze: in _WINDOW_R11): the real
+    # ---- round-11 additions (pre-freeze: in the r11 window): the real
     # synthetic codec replacing the multimodal NotImplementedError
     # stub (r10 verdict ask #5) — decoded-content math value-checked,
     # plus the poison-pill audit at the codec boundary ----

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import time
 
+import pytest
 from pyspark.sql import functions as F
 
 from _kafka_streams_scaffold_spark import pinning
@@ -85,3 +86,72 @@ def test_shared_pin_keep_scope_survives_family_release(spark):
     assert again is a
     assert again.count() == 10
     pinning.unpersist_all()
+
+
+def test_build_concurrently_returns_results_in_thunk_order(spark):
+    def finishing_in_reverse(i: int):
+        def run() -> int:
+            time.sleep(0.05 * (3 - i))
+            return i
+
+        return run
+
+    thunks = [finishing_in_reverse(i) for i in range(4)]
+    assert pinning.build_concurrently(*thunks) == [0, 1, 2, 3]
+
+
+def test_build_concurrently_reraises_after_every_thunk_finishes(spark):
+    finished = []
+
+    def fail():
+        raise ValueError("first")
+
+    def slow():
+        time.sleep(0.3)
+        finished.append("slow")
+
+    def fail_later():
+        time.sleep(0.1)
+        raise KeyError("second")
+
+    with pytest.raises(ValueError, match="first"):
+        pinning.build_concurrently(fail, slow, fail_later)
+    assert finished == ["slow"]
+
+
+def test_build_concurrently_nests(spark):
+    """corpus_keep_full builds corpus_keep inside one of its threads,
+    which itself builds concurrently: two levels of threads, each
+    submitting Spark jobs."""
+
+    def outer(n: int):
+        return lambda: pinning.build_concurrently(
+            lambda: spark.range(n).count(), lambda: spark.range(2 * n).count()
+        )
+
+    assert pinning.build_concurrently(outer(3), outer(5)) == [[3, 6], [5, 10]]
+
+
+def test_build_concurrently_threads_keep_the_callers_job_group(spark):
+    sc = spark.sparkContext
+    group = "build-concurrently-test"
+    sc.setJobGroup(group, "build_concurrently job group test")
+    try:
+
+        def read_group():
+            spark.range(3).count()
+            return sc.getLocalProperty("spark.jobGroup.id")
+
+        seen = pinning.build_concurrently(
+            read_group, lambda: pinning.build_concurrently(read_group)[0]
+        )
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        for prop in (
+            "spark.jobGroup.id",
+            "spark.job.description",
+            "spark.job.interruptOnCancel",
+        ):
+            sc.setLocalProperty(prop, None)
+    assert seen == [group, group]
+    assert len(jobs) >= 2

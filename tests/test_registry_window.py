@@ -3,8 +3,7 @@
 The external correctness gate hash-checks only the FIRST 50 registered
 queries, so registration ORDER is part of the contract: each round the
 window must carry exactly the queries that still need a driver
-CORRECTNESS row (see registry._WINDOW_R11 and the module docstring's
-rotation history).
+CORRECTNESS row (see registry._WINDOW_R12 and the module docstring).
 """
 
 from __future__ import annotations
@@ -13,6 +12,8 @@ import json
 import pathlib
 
 from _kafka_streams_scaffold_spark import registry
+
+_REPO = pathlib.Path(__file__).resolve().parents[1]
 
 # Green rounds available when the r11 window was frozen.
 _PRIOR_ROUNDS = (
@@ -120,12 +121,17 @@ R12_MATERIAL: set[str] = {
 def _covered() -> set[str]:
     covered: set[str] = set()
     for rnd in _PRIOR_ROUNDS:
-        p = pathlib.Path(f"/root/repo/CORRECTNESS_{rnd}.json")
+        p = _REPO / f"CORRECTNESS_{rnd}.json"
         if p.exists():
             for name, row in json.loads(p.read_text()).items():
                 if row.get("hash_match"):
                     covered.add(name)
     return covered
+
+
+def _family(prefix: str) -> list[str]:
+    """Ordered members of the shared-pin family keyed by ``prefix``."""
+    return next(ms for ps, ms in registry._PIN_FAMILIES if prefix in ps)
 
 
 def test_window_is_exactly_the_r12_rotation_list():
@@ -153,7 +159,7 @@ def test_dedup_audit_chain_runs_as_two_consecutive_blocks():
     pin BUILDER (dedup_tier_agreement's thread pool in the window;
     the constant-order head of the remainder outside)."""
     names = list(registry.queries())
-    family = registry._DEDUP_AUDIT_CHAIN + registry._DEDUP_PAIRS_CHAIN
+    family = _family("dedup.")
     window = set(registry._WINDOW_R12)
     frag = sorted(names.index(n) for n in family if n in window)
     rem = sorted(names.index(n) for n in family if n not in window)
@@ -174,7 +180,7 @@ def test_graph_chain_is_one_consecutive_window_block():
     block. dedup_clusters runs first (it builds edges/both/CC for
     the family)."""
     names = list(registry.queries())
-    members = ["dedup_clusters", "dup_pagerank", *registry._GRAPH_CHAIN]
+    members = _family("graph.")
     pos = [names.index(n) for n in members]
     assert pos == list(range(pos[0], pos[0] + len(pos))), (
         "graph family not consecutive in registry order"
@@ -186,18 +192,39 @@ def test_graph_chain_is_one_consecutive_window_block():
 def test_emb_chain_is_consecutive_across_the_window_boundary():
     """Round-12: the embedding/ANN family straddles the window
     boundary — a 10-member certified fragment ends the window and
-    _apply_window appends the rest of _EMB_CHAIN immediately after,
+    _apply_window appends the rest of the family immediately after,
     so the family still runs back-to-back and the sim.* pins build
     once. The window's last slot and the first post-window slot must
     both be family members."""
     names = list(registry.queries())
-    pos = sorted(names.index(n) for n in registry._EMB_CHAIN)
+    family = _family("sim.")
+    pos = sorted(names.index(n) for n in family)
     assert pos == list(range(pos[0], pos[0] + len(pos))), (
         "embedding family not consecutive in registry order"
     )
     w = registry._WINDOW_R12
-    assert w[-1] in registry._EMB_CHAIN
-    assert names[len(w)] in registry._EMB_CHAIN
+    assert w[-1] in family
+    assert names[len(w)] in family
+
+
+def test_pin_families_run_consecutively_outside_the_window():
+    """Every shared-pin family's members outside the window form one
+    consecutive run, so bench.py builds the family's pins once there.
+    Families are disjoint and registered, and pin_family reports each
+    member's keep-prefixes."""
+    names = list(registry.queries())
+    window = set(registry._WINDOW_R12)
+    seen: set[str] = set()
+    for prefixes, members in registry._PIN_FAMILIES:
+        assert set(members) <= set(names)
+        assert not seen & set(members), "query declared in two families"
+        seen |= set(members)
+        assert {registry.pin_family(n) for n in members} == {prefixes}
+        pos = sorted(names.index(n) for n in members if n not in window)
+        assert not pos or pos == list(range(pos[0], pos[0] + len(pos))), (
+            f"{prefixes} family not consecutive outside the window"
+        )
+    assert registry.pin_family("wordcount") == ()
 
 
 def test_cur_family_window_block_builds_keep_before_keep_full():

@@ -6,6 +6,8 @@ across inputs."""
 
 from __future__ import annotations
 
+import weakref
+
 from _kafka_streams_scaffold_spark import tables
 
 
@@ -33,3 +35,36 @@ def test_df_token_matches_semantic_hash(spark, sf_dir):
     syn = spark.range(5).selectExpr("id as doc_id", "'x' as text")
     assert tables.df_token(syn) == syn.semanticHash()
     assert tables.df_token(syn) != tables.df_token(df)
+
+
+class _LosingRaceDict(dict):
+    """A memo whose ``get`` also evicts the entry it returns: the
+    caller then sees the state a thread has after losing the race to
+    evict the same dead entry."""
+
+    def get(self, key, default=None):
+        return self.pop(key, default)
+
+
+def _dead_ref() -> weakref.ref:
+    class _Gone:
+        pass
+
+    obj = _Gone()
+    ref = weakref.ref(obj)
+    del obj
+    return ref
+
+
+def test_dead_entry_eviction_tolerates_a_concurrent_evictor(
+    spark, sf_dir, monkeypatch
+):
+    key = (id(spark), sf_dir, "documents")
+    memo = _LosingRaceDict({key: (_dead_ref(), None)})
+    monkeypatch.setattr(tables, "_TABLE_MEMO", memo)
+    df = tables.table(spark, sf_dir, "documents")
+    assert dict.get(memo, key)[1] is df
+
+    tokens = _LosingRaceDict({id(df): (_dead_ref(), -1)})
+    monkeypatch.setattr(tables, "_TOKEN_MEMO", tokens)
+    assert tables.df_token(df) == df.semanticHash()

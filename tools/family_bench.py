@@ -11,11 +11,11 @@ pins), which reproduces the pre-round-11 bench behaviour for A/B.
 
 from __future__ import annotations
 
-import os
+import pathlib
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1]))
 
 from _kafka_streams_scaffold_spark import pinning, registry, session  # noqa: E402
 
@@ -42,26 +42,6 @@ def main() -> None:
         w(spark, sf_dir).write.format("noop").mode("overwrite").save()
     pinning.unpersist_all()
 
-    families = [
-        (
-            set(registry._DEDUP_AUDIT_CHAIN)
-            | set(registry._DEDUP_PAIRS_CHAIN),
-            ("dedup.",),
-        ),
-        (
-            set(registry._GRAPH_CHAIN) | {"dedup_clusters", "dup_pagerank"},
-            ("graph.",),
-        ),
-        (set(registry._EMB_CHAIN) | {"ann_topk"}, ("sim.",)),
-        (set(registry._CUR_CHAIN) | {"corpus_keep"}, ("cur.", "bpe.")),
-    ]
-
-    def _family(n):
-        for fid, (members, prefixes) in enumerate(families):
-            if n in members:
-                return fid, prefixes
-        return None, ()
-
     total = 0.0
     for i, name in enumerate(names):
         t0 = time.time()
@@ -70,9 +50,9 @@ def main() -> None:
         dt = time.time() - t0
         total += dt
         print(f"{dt:8.2f}  {name}", flush=True)
-        fid, prefixes = _family(name)
+        prefixes = registry.pin_family(name)
         nxt = names[i + 1] if i + 1 < len(names) else None
-        if not cold and fid is not None and _family(nxt)[0] == fid:
+        if not cold and prefixes and registry.pin_family(nxt) == prefixes:
             pinning.unpersist_all(
                 keep=lambda k: isinstance(k, tuple)
                 and str(k[0]).startswith(prefixes)

@@ -45,6 +45,7 @@ from pyspark.sql import functions as F
 
 from .. import tables
 from ..pinning import build_concurrently
+from ..pinning import pin as _pin
 from ..pinning import shared_pin as _shared_pin
 from .dedup import simhash_pairs_query
 
@@ -235,12 +236,14 @@ def connected_components(
         )
         .select("src", "dst")
     )
-    # Eager: ``pairs`` feeds both the initial labels and the contracted
+    # Pinned: ``pairs`` feeds both the initial labels and the contracted
     # edge table below; a lazy checkpoint would re-run the union-find
     # once per consumer subtree inside round 1's job.
-    pairs = eligible.mapInPandas(
-        _contract_partition, schema=f"doc_id {idt}, label {idt}"
-    ).localCheckpoint(eager=True)
+    pairs = _pin(
+        eligible.mapInPandas(
+            _contract_partition, schema=f"doc_id {idt}, label {idt}"
+        )
+    )
     # ACTIVE-SET restriction (unchanged contract): isolated nodes never
     # change labels, so only edge endpoints participate; they rejoin as
     # singleton clusters in the final left join. Every eligible

@@ -1,32 +1,48 @@
-"""Eager persist for derived tables that feed self-joins, with a
-session-lifetime leak guard.
+"""Eager pins for derived tables that feed self-joins, owned by scopes.
 
-Without a persist, each side of a self-join re-runs the ENTIRE
-upstream pipeline (scan -> derive -> aggregate): the physical plan
-shows two FileScans and zero ReusedExchange, because the join sides
-shuffle on different keys than the derivation produced. Pinned tables
-(shingle lists, minhash signatures, IVF cells) are orders of magnitude
-smaller than their inputs, and MEMORY_AND_DISK spills rather than
-OOMs. (At true cluster scale you'd write them to a parquet stage
-table; persist is the in-session equivalent.)
+Without a pin, each side of a self-join re-runs the ENTIRE upstream
+pipeline (scan -> derive -> aggregate): the physical plan shows two
+FileScans and zero ReusedExchange, because the join sides shuffle on
+different keys than the derivation produced. Pinned tables (shingle
+lists, minhash signatures, IVF cells) are orders of magnitude smaller
+than their inputs. (At true cluster scale you'd write them to a
+parquet stage table; a pin is the in-session equivalent.)
 
-Materialized EAGERLY: when both consumers sit in one job, their tasks
-race to fill the cache and each may recompute its partitions (persist
-never blocks on an in-flight computation) — measured as 2-7s
-run-to-run variance on the LSH pipeline. One count() up front makes
-every consumer a pure cache read.
+Pins are checkpoint-backed and EAGER. ``localCheckpoint(eager=True)``
+materializes exactly once and hands consumers a LogicalRDD leaf, so
+composite plans collapse to the post-pin operators (knn_triangles'
+formatted plan rendered 4,091 Exchange nodes with full-lineage pins;
+build 7.5s -> 4.7s, exec 2.8s -> 0.3s at sf0.1). Partitioning and
+ordering are preserved and values are identical. Eager, because when
+two consumers sit in one job their tasks race to fill a lazy cache and
+each may recompute its partitions (measured as 2-7s run-to-run
+variance on the LSH pipeline). localCheckpoint blocks are
+unreplicated; a production deployment swaps in reliable
+checkpoint(dir) or a parquet stage table.
 
-Every pin is tracked; harnesses that loop over many queries in one
-session (bench.py, tools/check_oracle.py, the driver) call
-``unpersist_all()`` between queries so cached tables don't accumulate
-for the session lifetime.
+Every pin belongs to the scope that is current when it is taken. The
+process default is the root scope, whose containers are the module's
+``_PINNED`` list and ``_SHARED`` memo. ``with scope():`` opens a child
+scope with its parent's mode and releases the child's own pins on
+exit, never any outside it. ``with full_lineage():`` opens a
+full-lineage scope for plan audits that must see THROUGH the pin
+boundary: its pins are plan-only ``persist()`` with no job, so
+consumer plans keep the complete logical derivation. The current
+scope is a context variable: ``build_concurrently`` threads pin into
+their caller's scope, and any other new thread (an HTTP handler
+thread) starts in the root scope.
+
+Harnesses that loop over many queries in one session (bench.py,
+tools/check_oracle.py, external harnesses) call ``unpersist_all()``
+between queries so cached tables don't accumulate for the session
+lifetime.
 """
 
 from __future__ import annotations
 
-import os
+import contextvars
 import threading
-from collections.abc import Callable
+from collections.abc import Callable, Iterator
 from contextlib import contextmanager
 from typing import TypeVar
 
@@ -38,65 +54,64 @@ T = TypeVar("T")
 
 _PINNED: list[DataFrame] = []
 _SHARED: dict[object, DataFrame] = {}
-_KEY_LOCKS: dict[object, threading.Lock] = {}
-_KEY_LOCKS_GUARD = threading.Lock()
-
-# Round-11 optimization: pins are checkpoint-backed by default.
-#
-# A persist()-ed pin keeps its FULL logical lineage in every consumer
-# plan. Composite queries that join a pinned table against itself (or
-# stack pinned stages three deep — the kNN family) then carry the
-# whole upstream chain once per reference: knn_triangles' formatted
-# plan rendered 4,091 Exchange nodes pre-change, and Catalyst
-# analysis + CacheManager plan-matching over those trees dominated
-# the build phase (measured: build 7.5s / exec 2.8s at sf0.1; with
-# truncation build 4.7s / exec 0.3s). ``localCheckpoint(eager=True)``
-# materializes exactly once (same work as persist+count) and hands
-# consumers a LogicalRDD leaf — partitioning and ordering are
-# preserved (Dataset.localCheckpoint keeps outputPartitioning /
-# outputOrdering), values are identical, and plans collapse to the
-# post-pin operators.
-#
-# Cluster posture: localCheckpoint stores unreplicated blocks — the
-# same trade clustering.py documents for its iteration checkpoints;
-# a production deployment swaps in reliable checkpoint(dir) or a
-# parquet stage table. Set SPARK_GRAFT_PIN_MODE=persist (or call
-# set_truncate(False)) to keep full-lineage persist pins — the plan
-# inspection tests use this to audit upstream plan shapes through
-# the pin boundary.
-_TRUNCATE = os.environ.get("SPARK_GRAFT_PIN_MODE", "ckpt") != "persist"
 
 
-def set_truncate(on: bool) -> bool:
-    """Toggle checkpoint-backed pins; returns the previous mode."""
-    global _TRUNCATE
-    prev = _TRUNCATE
-    _TRUNCATE = on
-    return prev
+class _Scope:
+    """One owner of pins: the pins taken in it, its shared-pin memo
+    with per-key build locks, and its mode (checkpoint-backed, or
+    full-lineage plan-only persist)."""
+
+    def __init__(self, full_lineage: bool, pinned=None, shared=None):
+        self.full_lineage = full_lineage
+        self.pinned: list[DataFrame] = [] if pinned is None else pinned
+        self.shared: dict[object, DataFrame] = {} if shared is None else shared
+        self.locks: dict[object, threading.Lock] = {}
+        self.guard = threading.Lock()
+
+
+_CURRENT: contextvars.ContextVar[_Scope] = contextvars.ContextVar(
+    "pin_scope", default=_Scope(False, _PINNED, _SHARED)
+)
 
 
 @contextmanager
-def full_lineage():
-    """Scope with persist-backed (full-lineage) pins: plan-shape
-    audits that must see THROUGH the pin boundary (scan counts,
-    anti-pattern sweeps over complete trees) run inside this, so the
-    checkpoint default never hides an upstream plan from them. Pins
-    created inside are released on exit."""
-    prev = set_truncate(False)
+def _child(full_lineage: bool) -> Iterator[None]:
+    child = _Scope(full_lineage)
+    token = _CURRENT.set(child)
     try:
         yield
     finally:
-        unpersist_all()
-        set_truncate(prev)
+        _CURRENT.reset(token)
+        _release_scope(child, ())
+
+
+def scope():
+    """Open a child scope with the current scope's mode; every pin
+    taken in it (including on ``build_concurrently`` threads) is
+    released on exit. Shared pins are memoized per scope, so a child
+    builds its own copy of a key its parent already holds."""
+    return _child(_CURRENT.get().full_lineage)
+
+
+def full_lineage():
+    """Open a full-lineage child scope: pins persist without running a
+    job, so plan-shape audits (scan counts, anti-pattern sweeps over
+    complete trees) see the upstream plan through every pin. Pins
+    taken inside are released on exit."""
+    return _child(True)
+
+
+def is_full_lineage() -> bool:
+    return _CURRENT.get().full_lineage
 
 
 def pin(df: DataFrame) -> DataFrame:
-    if _TRUNCATE:
-        df = df.localCheckpoint(eager=True)
-    else:
+    current = _CURRENT.get()
+    if current.full_lineage:
         df = df.persist(StorageLevel.MEMORY_AND_DISK)
-        df.count()
-    _PINNED.append(df)
+    else:
+        df = df.localCheckpoint(eager=True)
+    current.pinned.append(df)
     return df
 
 
@@ -124,28 +139,30 @@ def shared_pin(key, build) -> DataFrame:
     artifact) share one materialization instead of re-deriving it
     per query. Keyed by the caller's (name, input-semantic-hash)
     tuple so distinct inputs — different sf_dirs, monkeypatched test
-    frames — never collide. Lifetime matches ``pin``: cleared by
-    ``unpersist_all`` (which harnesses call between queries), so
-    sharing only ever spans one composite query or one deliberate
-    multi-query scope. At cluster scale this is the stage-table each
-    tier would read instead of re-shingling the corpus.
+    frames — never collide. The memo belongs to the current scope and
+    is cleared with its pins by ``unpersist_all`` (which harnesses
+    call between queries), so sharing only ever spans one composite
+    query or one deliberate multi-query family. At cluster scale this
+    is the stage-table each tier would read instead of re-shingling
+    the corpus.
 
     Thread-safe via double-checked per-key locking, so composite
     queries may build plans that share pinned intermediates from
     concurrent threads (multi-thread job submission): the first
     caller builds, latecomers block on that key only — never a
     duplicate materialization, never a global serialization."""
-    df = _SHARED.get(key)
+    current = _CURRENT.get()
+    df = current.shared.get(key)
     if df is not None:
         return df
-    with _KEY_LOCKS_GUARD:
-        lock = _KEY_LOCKS.setdefault(key, threading.Lock())
+    with current.guard:
+        lock = current.locks.setdefault(key, threading.Lock())
     with lock:
-        df = _SHARED.get(key)
+        df = current.shared.get(key)
         if df is not None:
             return df
         df = pin(build())
-        _SHARED[key] = df
+        current.shared[key] = df
         return df
 
 
@@ -157,18 +174,23 @@ def build_concurrently(*thunks: Callable[[], T]) -> list[T]:
 
     Each thread is a ``pyspark.InheritableThread``, so jobs it submits
     carry the caller's Spark local properties (job group, job
-    description, scheduler pool). If a thunk raises, the first failure
-    in thunk order is re-raised once every thread has finished."""
+    description, scheduler pool), and each thunk runs in a copy of the
+    caller's context, so its pins belong to the caller's scope. If a
+    thunk raises, the first failure in thunk order is re-raised once
+    every thread has finished."""
     results: list = [None] * len(thunks)
     errors: list[Exception | None] = [None] * len(thunks)
 
-    def run(i: int) -> None:
+    def run(i: int, ctx: contextvars.Context) -> None:
         try:
-            results[i] = thunks[i]()
+            results[i] = ctx.run(thunks[i])
         except Exception as ex:  # re-raised after every thread joins
             errors[i] = ex
 
-    threads = [InheritableThread(run, args=(i,)) for i in range(len(thunks))]
+    threads = [
+        InheritableThread(run, args=(i, contextvars.copy_context()))
+        for i in range(len(thunks))
+    ]
     for t in threads:
         t.start()
     for t in threads:
@@ -179,63 +201,52 @@ def build_concurrently(*thunks: Callable[[], T]) -> list[T]:
     return results
 
 
-def unpersist_all(keep=None) -> int:
-    """Release every pinned table; returns how many were released.
-    Consumers that already materialized their results are unaffected.
-
-    RELEASE-ORDER CONTRACT (r11 ADVICE): in the default checkpoint
-    mode a released pin is UNRECOVERABLE — ``_release`` unpersists the
-    localCheckpointed RDD whose lineage was truncated, so a consumer
-    that re-executes a released pin fails with a missing-checkpoint
-    error instead of recomputing (and unreplicated local-checkpoint
-    blocks likewise die with their executor on a real cluster).
-    Harness and test call sites must therefore fully execute every
-    consumer BEFORE releasing (bench.py, check_oracle.py and the test
-    suites all do: one query's actions complete before the release
-    between queries). Only persist-mode pins
-    (``SPARK_GRAFT_PIN_MODE=persist`` / ``full_lineage()``) keep the
-    old recompute-on-release semantics — use that mode for any path
-    that may re-execute a released frame.
-
-    ``keep``: optional predicate over SHARED-pin keys. Matching
-    shared pins (and their cached tables) survive the release — the
-    scope harnesses use to let a CONSECUTIVE family of composite
-    queries (the dedup audits, which all derive the same
-    shingle/signature/pair roots) share one materialization instead
-    of each rebuilding it, while still clearing everything else
-    between queries. Keeping a derived pin keeps only ITSELF alive,
-    not its upstream lineage — shared chains (capped_inter over
-    capped_shingles) stay correct because each level is its own
-    shared pin and the predicate keeps the whole prefix family."""
-    if keep is None:
-        n = len(_PINNED)
-        while _PINNED:
-            _release(_PINNED.pop())
-        _SHARED.clear()
-        # shared_pin keys embed input semantic hashes, so a long
-        # multi-query session (bench.py over the whole registry) would
-        # otherwise accumulate one never-freed lock per (name, input)
-        # key. Locks are only meaningful while their pin might be
-        # built, and we just cleared all pins.
-        with _KEY_LOCKS_GUARD:
-            _KEY_LOCKS.clear()
-        return n
-    kept = {k: df for k, df in _SHARED.items() if keep(k)}
+def _release_scope(owner: _Scope, keep: tuple[str, ...]) -> int:
+    kept = {
+        k: df
+        for k, df in owner.shared.items()
+        if isinstance(k, tuple) and str(k[0]).startswith(keep)
+    }
     kept_ids = {id(df) for df in kept.values()}
-    n = 0
-    survivors: list[DataFrame] = []
-    while _PINNED:
-        df = _PINNED.pop()
-        if id(df) in kept_ids:
-            survivors.append(df)
-        else:
-            _release(df)
-            n += 1
-    _PINNED.extend(survivors)
-    _SHARED.clear()
-    _SHARED.update(kept)
-    with _KEY_LOCKS_GUARD:
-        for k in list(_KEY_LOCKS):
-            if k not in kept:
-                del _KEY_LOCKS[k]
-    return n
+    doomed = [df for df in owner.pinned if id(df) not in kept_ids]
+    owner.pinned[:] = [df for df in owner.pinned if id(df) in kept_ids]
+    for df in reversed(doomed):
+        _release(df)
+    owner.shared.clear()
+    owner.shared.update(kept)
+    # shared_pin keys embed input semantic hashes, so a long
+    # multi-query session (bench.py over the whole registry) would
+    # otherwise accumulate one never-freed lock per (name, input) key.
+    with owner.guard:
+        for k in [k for k in owner.locks if k not in kept]:
+            del owner.locks[k]
+    return len(doomed)
+
+
+def unpersist_all(keep: tuple[str, ...] = ()) -> int:
+    """Release every pin of the current scope; returns how many were
+    released. Pins of enclosing scopes are untouched. Consumers that
+    already materialized their results are unaffected.
+
+    RELEASE-ORDER CONTRACT: a released checkpoint pin is UNRECOVERABLE
+    — ``_release`` unpersists the localCheckpointed RDD whose lineage
+    was truncated, so a consumer that re-executes a released pin fails
+    with a missing-checkpoint error instead of recomputing (and
+    unreplicated local-checkpoint blocks likewise die with their
+    executor on a real cluster). Every consumer must therefore be fully
+    executed BEFORE its scope releases: bench.py, check_oracle.py and
+    the test suites finish one query's actions before the release
+    between queries, and an HTTP request collects its rows before its
+    ``scope()`` exits. Only full-lineage pins recompute after release.
+
+    ``keep``: shared-pin key prefixes. A shared pin whose key is a
+    tuple with a first element starting with one of them (and its
+    cached table) survives — the family scope harnesses use to let a
+    CONSECUTIVE family of composite queries (the dedup audits, which
+    all derive the same shingle/signature/pair roots) share one
+    materialization while everything else is cleared between queries.
+    Keeping a derived pin keeps only ITSELF alive, not its upstream
+    lineage — shared chains (capped_inter over capped_shingles) stay
+    correct because each level is its own shared pin and the prefix
+    keeps the whole family."""
+    return _release_scope(_CURRENT.get(), keep)

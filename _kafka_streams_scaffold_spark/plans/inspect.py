@@ -11,6 +11,8 @@ import re
 
 from pyspark.sql import DataFrame
 
+from .. import pinning
+
 
 def explain_str(df: DataFrame) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(  # type: ignore[attr-defined]
@@ -42,14 +44,13 @@ def has_broadcast_join(df: DataFrame) -> bool:
 
 def reads_pinned(tree_text: str) -> bool:
     """True when the plan reads a pinned (materialized) table instead
-    of re-deriving it — STRICT persist-mode check (``InMemoryTableScan``
-    only). Round-12 (r11 ADVICE): the checkpoint-mode fallback of
-    accepting any ``Scan ExistingRDD`` leaf was vacuous — every
-    localCheckpoint (e.g. clustering's iteration checkpoints) and
-    createDataFrame renders the same leaf, so a query that stopped
-    reading its pinned artifact could still pass. Plan-shape tests
-    that assert on pins now run under ``pinning.full_lineage()`` so
-    pins render distinguishably."""
+    of re-deriving it (``InMemoryTableScan``). Only full-lineage pins
+    render that node; a checkpoint pin renders the same 'Scan
+    ExistingRDD' leaf as any localCheckpoint or createDataFrame, so
+    the check would be vacuous there. Raises outside
+    ``pinning.full_lineage()`` instead of answering False."""
+    if not pinning.is_full_lineage():
+        raise RuntimeError("reads_pinned needs pinning.full_lineage()")
     return "InMemoryTableScan" in tree_text
 
 

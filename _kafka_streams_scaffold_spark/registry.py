@@ -305,6 +305,15 @@ def pin_family(name: str | None) -> tuple[str, ...]:
     return _FAMILY_OF.get(name, ())
 
 
+def family_keep(name: str | None, nxt: str | None) -> tuple[str, ...]:
+    """``unpersist_all(keep=...)`` prefixes for the release after
+    ``name`` when ``nxt`` runs next: its family's prefixes while the
+    next query is a member of the same family, else ``()`` (release
+    everything)."""
+    prefixes = pin_family(name)
+    return prefixes if pin_family(nxt) == prefixes else ()
+
+
 def _apply_window(window: list[str]) -> None:
     """Reorder the registry so ``window`` occupies slots 0-49 (the
     gate's hash-checked prefix), each shared-pin family's remaining

@@ -40,6 +40,8 @@ import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from typing import Callable
 
+from .. import pinning
+
 PAD = 5  # zero-padding of the product half of the compound key
 
 
@@ -221,8 +223,13 @@ class RegistryQueryService:
     def run(self, name: str) -> dict:
         if name not in self._queries:
             raise KeyError(name)
-        df = self._queries[name](self._spark, self._sf_dir)
-        rows = df.limit(self._max_rows + 1).collect()
+        # One pin scope per request: its pins are released once the
+        # rows are collected. A handler thread starts in a fresh
+        # context, so concurrent requests never share or release each
+        # other's pins (each builds its own shared pins).
+        with pinning.scope():
+            df = self._queries[name](self._spark, self._sf_dir)
+            rows = df.limit(self._max_rows + 1).collect()
         truncated = len(rows) > self._max_rows
 
         def jsonable(v):

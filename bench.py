@@ -111,7 +111,7 @@ def main() -> None:
     _calibration(spark)
     cal_first = _calibration(spark)
 
-    # Shared-pin families (registry.pin_family): consecutive composite
+    # Shared-pin families (registry.family_keep): consecutive composite
     # queries that derive the same shared roots. Within a consecutive
     # run of one family, release everything EXCEPT that family's
     # shared_pin roots so later members read the first member's
@@ -119,7 +119,7 @@ def main() -> None:
     # cleared the moment the next query is an outsider, so solo
     # measurements and every other query keep the honest
     # per-query-release contract.
-    from _kafka_streams_scaffold_spark.registry import pin_family
+    from _kafka_streams_scaffold_spark.registry import family_keep
 
     names = list(qs)
     timings: dict[str, float] = {}
@@ -134,8 +134,7 @@ def main() -> None:
     for i, name in enumerate(names):
         fn = qs[name]
         prev = names[i - 1] if i > 0 else None
-        prefixes = pin_family(name)
-        if prefixes and pin_family(prev) == prefixes:
+        if family_keep(prev, name):
             warm_family.append(name)
         t0 = time.time()
         df = fn(spark, sf_dir)
@@ -149,13 +148,7 @@ def main() -> None:
         # first 21 registry slots with per-query release (ivf_assign
         # alone: 9.1s pinned-accumulating vs 1.1s clean).
         nxt = names[i + 1] if i + 1 < len(names) else None
-        if prefixes and pin_family(nxt) == prefixes:
-            pinning.unpersist_all(
-                keep=lambda k: isinstance(k, tuple)
-                and str(k[0]).startswith(prefixes)
-            )
-        else:
-            pinning.unpersist_all()
+        pinning.unpersist_all(keep=family_keep(name, nxt))
     total = round(time.time() - t_all, 3)
 
     cal_last = _calibration(spark)

@@ -22,3 +22,15 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture()
+def full_lineage_pins():
+    """Run a plan test in a full-lineage pin scope. Checkpoint pins
+    render the same 'Scan ExistingRDD' leaf as any localCheckpoint, so
+    audits of pin reads (``reads_pinned``) and of scans through a pin
+    need persist pins, which render InMemoryTableScan."""
+    from _kafka_streams_scaffold_spark import pinning
+
+    with pinning.full_lineage():
+        yield

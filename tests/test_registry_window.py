@@ -406,17 +406,26 @@ def test_no_registered_query_emits_complex_top_level_columns(spark, sf_dir):
     exact-integer money (BIGINT cents via floor(100*x)) or DOUBLE."""
     from pyspark.sql import types as T
 
+    from _kafka_streams_scaffold_spark import pinning
+
     bad: dict[str, list[str]] = {}
-    for name, fn in registry.queries().items():
-        schema = fn(spark, sf_dir).schema
-        complex_cols = [
-            f.name
-            for f in schema.fields
-            if isinstance(
-                f.dataType,
-                (T.ArrayType, T.MapType, T.StructType, T.DecimalType),
-            )
-        ]
-        if complex_cols:
-            bad[name] = complex_cols
+    qs = registry.queries()
+    names = list(qs)
+    # Release between queries as bench.py does: a shared-pin family
+    # stays warm only while its next member runs.
+    with pinning.scope():
+        for i, name in enumerate(names):
+            schema = qs[name](spark, sf_dir).schema
+            nxt = names[i + 1] if i + 1 < len(names) else None
+            pinning.unpersist_all(keep=registry.family_keep(name, nxt))
+            complex_cols = [
+                f.name
+                for f in schema.fields
+                if isinstance(
+                    f.dataType,
+                    (T.ArrayType, T.MapType, T.StructType, T.DecimalType),
+                )
+            ]
+            if complex_cols:
+                bad[name] = complex_cols
     assert not bad, f"complex top-level columns would break driver canon: {bad}"

@@ -22,18 +22,8 @@ from _kafka_streams_scaffold_spark.plans import inspect as pi
 import pytest
 
 
-@pytest.fixture(autouse=True)
-def _full_lineage_pins():
-    """Round-12 (r11 ADVICE): these plan assertions audit PIN reads;
-    checkpoint-mode pins render the same 'Scan ExistingRDD' leaf as
-    any localCheckpoint, which made reads_pinned vacuous. Persist-mode
-    pins render InMemoryTableScan distinguishably, so every test in
-    this module runs under full-lineage pins (the audited logical
-    query surface is identical in both modes)."""
-    from _kafka_streams_scaffold_spark import pinning
-
-    with pinning.full_lineage():
-        yield
+# reads_pinned and scan counts through pins need full-lineage pins
+pytestmark = pytest.mark.usefixtures("full_lineage_pins")
 
 
 def _n(tree: str, node: str) -> int:

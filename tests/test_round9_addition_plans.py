@@ -16,25 +16,14 @@ from _kafka_streams_scaffold_spark.operators import (
     stats,
     textops,
 )
-from _kafka_streams_scaffold_spark import pinning
 from _kafka_streams_scaffold_spark.plans import inspect as pi
 
 
 import pytest
 
 
-@pytest.fixture(autouse=True)
-def _full_lineage_pins():
-    """Round-12 (r11 ADVICE): these plan assertions audit PIN reads;
-    checkpoint-mode pins render the same 'Scan ExistingRDD' leaf as
-    any localCheckpoint, which made reads_pinned vacuous. Persist-mode
-    pins render InMemoryTableScan distinguishably, so every test in
-    this module runs under full-lineage pins (the audited logical
-    query surface is identical in both modes)."""
-    from _kafka_streams_scaffold_spark import pinning
-
-    with pinning.full_lineage():
-        yield
+# reads_pinned and scan counts through pins need full-lineage pins
+pytestmark = pytest.mark.usefixtures("full_lineage_pins")
 
 
 def _n(tree: str, node: str) -> int:
@@ -46,11 +35,10 @@ def _no_python(t: str) -> None:
 
 
 def test_tail_share_one_scan_broadcast_anti_head(spark, sf_dir):
-    with pinning.full_lineage():
-        t = pi.tree(
-            lexstats.tail_token_share_query(spark, sf_dir),
-            elide_cached=False,
-        )
+    t = pi.tree(
+        lexstats.tail_token_share_query(spark, sf_dir),
+        elide_cached=False,
+    )
     _no_python(t)
     # the (source, term) rollup is pinned: totals, the head and the
     # anti-probe all read ONE cached build — exactly one parquet scan
@@ -68,10 +56,9 @@ def test_tail_share_one_scan_broadcast_anti_head(spark, sf_dir):
 
 
 def test_log_odds_grid_one_scan_broadcast_built(spark, sf_dir):
-    with pinning.full_lineage():
-        t = pi.tree(
-            lexstats.log_odds_terms_query(spark, sf_dir), elide_cached=False
-        )
+    t = pi.tree(
+        lexstats.log_odds_terms_query(spark, sf_dir), elide_cached=False
+    )
     _no_python(t)
     assert pi.reads_pinned(t)  # pinned artifact read, not re-derived
     assert _n(t, "Scan parquet") == 1
@@ -94,11 +81,10 @@ def test_lexicon_gate_is_one_scan_no_explode_shuffle(spark, sf_dir):
 
 
 def test_v_measure_single_assignment_dimension_rollups(spark, sf_dir):
-    with pinning.full_lineage():
-        t = pi.tree(
-            similarity.v_measure_cells_query(spark, sf_dir),
-            elide_cached=False,
-        )
+    t = pi.tree(
+        similarity.v_measure_cells_query(spark, sf_dir),
+        elide_cached=False,
+    )
     _no_python(t)
     # the (cell, label) joint rollup is pinned; cells/labels/grand
     # totals broadcast back onto it
@@ -155,10 +141,9 @@ def test_weighted_median_window_runs_on_compressed_points(spark, sf_dir):
 def test_participation_ratio_one_pass_no_smj(spark, sf_dir):
     from _kafka_streams_scaffold_spark.operators import pca
 
-    with pinning.full_lineage():
-        t = pi.tree(
-            pca.participation_ratio_query(spark, sf_dir), elide_cached=False
-        )
+    t = pi.tree(
+        pca.participation_ratio_query(spark, sf_dir), elide_cached=False
+    )
     _no_python(t)
     # one corpus scan into the pinned d^2 moment rollup; trace and
     # Frobenius folds read the cache; marginals broadcast

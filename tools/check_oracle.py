@@ -12,10 +12,11 @@ from __future__ import annotations
 
 import decimal
 import math
+import pathlib
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1]))
 
 
 def _canon(v):

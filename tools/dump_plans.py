@@ -9,9 +9,10 @@ Usage: python tools/dump_plans.py <tag> <sf_dir> <query> [query ...]
 from __future__ import annotations
 
 import os
+import pathlib
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1]))
 
 from _kafka_streams_scaffold_spark import pinning, registry, session  # noqa: E402
 

@@ -50,15 +50,8 @@ def main() -> None:
         dt = time.time() - t0
         total += dt
         print(f"{dt:8.2f}  {name}", flush=True)
-        prefixes = registry.pin_family(name)
         nxt = names[i + 1] if i + 1 < len(names) else None
-        if not cold and prefixes and registry.pin_family(nxt) == prefixes:
-            pinning.unpersist_all(
-                keep=lambda k: isinstance(k, tuple)
-                and str(k[0]).startswith(prefixes)
-            )
-        else:
-            pinning.unpersist_all()
+        pinning.unpersist_all(keep=() if cold else registry.family_keep(name, nxt))
     print(f"TOTAL {total:.1f}s over {len(names)} queries "
           f"({'cold' if cold else 'family-warm'})")
     spark.stop()

@@ -54,9 +54,11 @@ def cc_rounds(nodes, edges, both=None):
         )
         .select("src", "dst")
     )
-    pairs = eligible.mapInPandas(
-        clustering._contract_partition, schema=f"doc_id {idt}, label {idt}"
-    ).localCheckpoint(eager=True)
+    pairs = pinning.pin(
+        eligible.mapInPandas(
+            clustering._contract_partition, schema=f"doc_id {idt}, label {idt}"
+        )
+    )
     print(
         f"    contraction: {time.time() - t0:.2f}s pairs={pairs.count()}",
         flush=True,

@@ -16,10 +16,11 @@ Usage: python tools/profile_emb_chain.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import os
+import pathlib
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1]))
 
 from _kafka_streams_scaffold_spark import pinning, registry, session  # noqa: E402
 
